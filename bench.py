@@ -187,8 +187,6 @@ def bench_crawl(spark, n_docs: int, rounds: int = 4, seed_frac: float = 0.3) -> 
         # of the frontier; unsalted, its claim window sorts on ONE core
         # and flat-lines the scaling ratio (PLANS.md ledger)
         salt_hot_hosts=8,
-        # links-phase Arrow granularity A/B knob (VERDICT r4 #3)
-        links_kernel=os.environ.get("SPARK_GRAFT_LINKS_KERNEL", "auto"),
     )
     eng = CrawlEngine(spark=spark, corpus=corpus, cfg=cfg, bloom_capacity=1 << 22)
     step = max(1, int(1 / seed_frac))

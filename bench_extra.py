@@ -114,6 +114,7 @@ def cmd_phases(sf_dir: str) -> None:
 
     from distributed_web_scrapper_and_crawler_spark.analytics.queries import t
     from distributed_web_scrapper_and_crawler_spark.operators import ann, dedup
+    from distributed_web_scrapper_and_crawler_spark.operators.spread import spread_small_scan
 
     spark = get_session()
     warmup(spark, sf_dir)
@@ -126,7 +127,7 @@ def cmd_phases(sf_dir: str) -> None:
     res["lsh.minhash_table"] = _noop(mh)
 
     sc.setJobDescription("phase: shingle explode only (no hash)")
-    sh = dedup._char_ngrams_rows(dedup._spread_small_scan(docs), "doc_id", "text", 8)
+    sh = dedup._char_ngrams_rows(spread_small_scan(docs), "doc_id", "text", 8)
     res["lsh.shingle_rows_only"] = _noop(sh.select(F.count(F.lit(1)).alias("n")))
 
     sc.setJobDescription("phase: shingle x8 seeds + md5 (no agg)")

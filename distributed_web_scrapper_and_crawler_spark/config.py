@@ -92,70 +92,29 @@ class CrawlConfig:
     # job; benchmarks turn it off independently of collect_stats because
     # the north metric needs links_found but not urls_fetched.
     collect_fetch_stats: bool = True
-    # Broadcast the (budget-bounded) claim batch into the fetch join so the
-    # corpus side never shuffles; disable for unbounded claim batches.
-    broadcast_fetch: bool = True
-    # Fetch-join strategy override: None derives from broadcast_fetch
-    # ("broadcast" / "shuffle"). "copartition" shuffles ONLY the claim side
-    # into the corpus's existing hash partitioning (corpus must be cached
-    # pre-partitioned on its doc_id/url key) with a per-partition hash
-    # build — no driver-side broadcast collect+build (that build is serial
-    # time every round, identical at every cluster size), and no bound on
-    # claim size. The bucket-join analog for an Iceberg corpus.
-    fetch_join: str | None = None
+    # Fetch-join strategy: "broadcast" ships the (budget-bounded) claim
+    # batch to every corpus partition so the corpus side never shuffles.
+    # "copartition" shuffles ONLY the claim side into the corpus's existing
+    # hash partitioning (corpus must be cached pre-partitioned on its
+    # doc_id/url key) with a per-partition hash build — no driver-side
+    # broadcast collect+build (that build is serial time every round,
+    # identical at every cluster size), and no bound on claim size. The
+    # bucket-join analog for an Iceberg corpus.
+    fetch_join: str = "broadcast"
     # Keep the write-only output tables (done/seen/pages/metrics) as lazy
     # unions over retained round caches instead of checkpointing them every
     # round. Each skipped checkpoint is a serial driver job; benchmarks
     # enable this (outputs are only read at the end). Costs cache memory
     # proportional to total fetched rows — bound crawls only.
     lazy_output_tables: bool = False
-    # Link-canonicalization implementation: 'arrow' (default) runs the
-    # vectorized pandas kernel over two flat string columns — measured
-    # FASTER on this box than per-row JVM regex (1.60 s vs 1.76-1.95 s per
-    # 1M-link batch, PLANS.md round-4 ledger) because the kernel is
-    # batched C while the Catalyst expression pays ~12 regex executions
-    # per row; 'hybrid' canonicalizes fast-path links entirely in
-    # whole-stage codegen and ships only residue strings across Arrow —
-    # byte-identical (tests/test_canonicalize.py hybrid sweep), preferable
-    # on deployments where Python worker processes are the scarce
-    # resource (memory-tight executors, no Arrow IPC budget).
-    canon_impl: str = "arrow"
-    # Granularity of the Arrow crossing in the links phase: 'flat' ships
-    # (base, href) per LINK (the base string ~16x duplicated on dup-heavy
-    # rounds); 'doc' ships (base, array<href>) per DOCUMENT so each base
-    # crosses once, with parallel-array outputs re-aligned by
-    # arrays_zip+posexplode in codegen. 'auto' (default) resolves to 'doc'
-    # under canon_impl='arrow' and 'flat' under 'hybrid' (which
-    # canonicalizes post-explode in the JVM). Measured (VERDICT r4 #3
-    # experiment, PLANS.md round-5 ledger): at the 200k-doc crawl bench the
-    # doc kernel's best quiet run beat flat's by 21% wall (34.9 s vs
-    # 44.4 s, links phase 13.3 s vs 15.8 s) — the in-session microbench
-    # alone read neutral; the win appears at crawl level where the links
-    # intermediate feeds the dedup shuffle and round caches.
-    links_kernel: str = "auto"
 
     def __post_init__(self) -> None:
-        # round.py dispatches on == 'hybrid'; without this a typo ('jvm',
-        # 'hybird') would silently run the arrow path
-        if self.canon_impl not in ("arrow", "hybrid"):
+        # round.py dispatches on == 'copartition'; without this a typo
+        # would silently run the broadcast join
+        if self.fetch_join not in ("broadcast", "copartition"):
             raise ValueError(
-                f"unknown canon_impl {self.canon_impl!r}: use arrow|hybrid"
+                f"unknown fetch_join {self.fetch_join!r}: use broadcast|copartition"
             )
-        if self.links_kernel not in ("auto", "flat", "doc"):
-            raise ValueError(
-                f"unknown links_kernel {self.links_kernel!r}: use auto|flat|doc"
-            )
-        if self.links_kernel == "doc" and self.canon_impl == "hybrid":
-            raise ValueError(
-                "links_kernel='doc' requires canon_impl='arrow': the hybrid "
-                "path canonicalizes after the posexplode"
-            )
-
-    def resolved_links_kernel(self) -> str:
-        """'auto' -> 'doc' on the arrow canon path, 'flat' under hybrid."""
-        if self.links_kernel == "auto":
-            return "doc" if self.canon_impl == "arrow" else "flat"
-        return self.links_kernel
 
     def field_names(self) -> list[str]:
         return [r.field for r in self.extraction_rules]

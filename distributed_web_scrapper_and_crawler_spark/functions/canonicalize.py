@@ -181,23 +181,18 @@ def _canon_links_pd(base: pd.Series, href: pd.Series, parity: bool) -> pd.DataFr
     """
     import numpy as np
 
-    # rows where BOTH inputs are null are hybrid-mode placeholders (the
-    # JVM fast path already produced their outputs; the inputs are nulled
-    # so Arrow ships validity bits, not string bytes) — emit null outputs
-    # without touching the per-row fallback
-    null_both = base.isna() & href.isna()
     href = _clean_urlish(href)
     base = _clean_urlish(base)
     n = len(href)
     # absolute iff lowercase http(s) scheme AND a non-empty netloc:
     # urljoin resolves 'http:///x' (empty netloc) against the base
-    is_abs = href.str.match(r"https?://[^/?#]") & ~null_both
+    is_abs = href.str.match(r"https?://[^/?#]")
     rel = ~is_abs
 
     url = pd.Series([None] * n, index=href.index, dtype=object)
     host = pd.Series([None] * n, index=href.index, dtype=object)
     out_path = pd.Series([None] * n, index=href.index, dtype=object)
-    handled = is_abs | null_both
+    handled = is_abs.copy()
 
     # -- fast relative branches: outputs are ASSEMBLED from the pieces the
     # branch already knows (origin, branch path, raw query), never
@@ -312,51 +307,23 @@ def _canon_links_pd(base: pd.Series, href: pd.Series, parity: bool) -> pd.DataFr
     return pd.DataFrame({"url": url, "host": host, "path": out_path})
 
 
-_CANON_SCHEMA_NOPATH = T.StructType(
-    [T.StructField("url", T.StringType()), T.StructField("host", T.StringType())]
-)
-
-
-@lru_cache(maxsize=8)
-def canon_links_flat_udf(parity: bool = True, include_path: bool = True):
-    """pandas UDF (base, href) -> struct(url, host[, path]) over FLAT
-    string columns — the vectorized hot path used by plans/round.py after
-    a JVM-side posexplode (sort/pos/depth stay in codegen; only two
-    string columns cross Arrow). ``include_path=False`` drops the path
-    column from the Arrow RETURN batch — the round plan discards it
-    unless robots enforcement is on, and a third string column over the
-    round's biggest intermediate is pure transfer cost. Cached per mode:
-    the round loop calls this every round, and a fresh function object
-    would re-pay closure pickling on every query."""
-
-    schema = _CANON_SCHEMA if include_path else _CANON_SCHEMA_NOPATH
-
-    @F.pandas_udf(schema)
-    def _canon(base: pd.Series, href: pd.Series) -> pd.DataFrame:
-        out = _canon_links_pd(base, href, parity)
-        return out if include_path else out[["url", "host"]]
-
-    return _canon
-
-
 @lru_cache(maxsize=8)
 def canon_links_doc_udf(parity: bool = True, include_path: bool = True):
     """DOC-granularity canonicalize: ``(base, hrefs: array<string>) ->
     struct(urls: array<string>, hosts: array<string>[, paths])``.
 
-    The flat kernel ships the parent URL across Arrow once PER LINK —
-    ~16x duplicated bytes on the round's biggest intermediate (VERDICT
-    r4 #3). Here each base string crosses ONCE per document; the kernel
-    flattens with ``np.repeat`` (object-pointer fan-out, no string
-    copies), reuses ``_canon_links_pd`` verbatim — so every
-    byte-equality proof for the flat kernel covers this one — and
-    re-chunks the outputs with ``np.split`` (again pointer slices).
-    Outputs are PARALLEL ARRAYS, not array<struct>: per-link Python
-    struct/dict construction is exactly what made the old fused
-    array<struct> UDF lose to the flat kernel (PLANS.md ledger); a
-    struct-of-arrays return keeps the per-doc Python work to three list
-    headers. The caller re-aligns positionally with ``arrays_zip`` +
-    ``posexplode`` — order is preserved end-to-end.
+    Each base string crosses Arrow ONCE per document (a per-link
+    crossing would ship it ~16x over on the round's biggest
+    intermediate; VERDICT r4 #3). The kernel flattens with ``np.repeat``
+    (object-pointer fan-out, no string copies), runs ``_canon_links_pd``
+    verbatim — so every byte-equality proof for that kernel covers this
+    one — and re-chunks the outputs with ``np.split`` (again pointer
+    slices). Outputs are PARALLEL ARRAYS, not array<struct>: per-link
+    Python struct/dict construction is what made the old fused
+    array<struct> UDF lose (PLANS.md ledger); a struct-of-arrays return
+    keeps the per-doc Python work to three list headers. The caller
+    re-aligns positionally with ``arrays_zip`` + ``posexplode`` — order
+    is preserved end-to-end.
     """
     import numpy as np
 
@@ -371,8 +338,8 @@ def canon_links_doc_udf(parity: bool = True, include_path: bool = True):
     @F.pandas_udf(schema)
     def _canon(base: pd.Series, hrefs: pd.Series) -> pd.DataFrame:
         # null hrefs arrays (e.g. a null spans column upstream) count as 0
-        # links: the flat kernel's posexplode drops such rows, so emitting
-        # an empty array keeps the two kernels equal (ADVICE r5 medium)
+        # links: an empty array, which the caller's posexplode drops
+        # (ADVICE r5 medium)
         counts = np.fromiter(
             (0 if h is None else len(h) for h in hrefs), dtype=np.int64, count=len(hrefs)
         )
@@ -402,98 +369,6 @@ def canon_links_doc_udf(parity: bool = True, include_path: bool = True):
         return pd.DataFrame(out, index=base.index)
 
     return _canon
-
-
-def _jvm_canon(b: F.Column, h: F.Column, parity: bool):
-    """The kernel's fast-path branch logic re-expressed in Catalyst:
-    returns (fast, url, host, path) Columns where ``fast`` marks rows the
-    JVM expressions fully canonicalize (same triggers as
-    ``_canon_links_pd``'s fast branches) and url/host/path are their
-    outputs — whole-stage codegen, no Python, no Arrow. Byte-equality
-    with the pandas kernel (and so with urljoin + normalize/canonicalize)
-    is pinned by the hybrid sweep in tests/test_canonicalize.py. All
-    regexes are ASCII char classes valid in both Java and Python regex;
-    array_sort's binary UTF8 ordering equals Python's str sort on the
-    ASCII-only sortable-query charset."""
-    b = F.coalesce(b, F.lit(""))
-    h = F.coalesce(h, F.lit(""))
-    clean = ~b.rlike(_URL_DIRTY) & ~h.rlike(_URL_DIRTY)
-    h_pre = F.regexp_extract(h, r"^([^?#]*)", 1)
-    has_q = h.rlike(r"^[^#]*\?")
-    h_q = F.regexp_extract(h, r"^[^?#]*\?([^#]*)", 1)
-    is_abs = h.rlike(r"^https?://[^/?#]")
-    # absolute pieces (h_pre carries no ?/# by construction)
-    nl_a = F.regexp_extract(h_pre, r"^https?://([^/]*)", 1)
-    p_a = F.regexp_extract(h_pre, r"^https?://[^/]*(.*)$", 1)
-    # relative pieces
-    origin = F.regexp_extract(b, r"^(https?://[^/?#]*)", 1)
-    bpath = F.regexp_extract(b, r"^https?://[^/?#]*(/[^?#]*)", 1)
-    rooted = h_pre.startswith("/")
-    simple = (h_pre != "") & ~h_pre.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*:|(^|/)\.\.?(/|$)|//")
-    root_ok = simple & rooted & (origin != "")
-    plain_ok = simple & ~rooted & (bpath != "") & ~bpath.rlike(_MERGE_SLOW)
-    bdir = F.regexp_replace(bpath, r"/[^/]*$", "/")
-    p_rel = F.when(rooted, h_pre).otherwise(F.concat(bdir, h_pre))
-    nl_rel = F.regexp_extract(origin, r"^https?://(.*)$", 1)
-    sch = F.when(
-        F.when(is_abs, h_pre).otherwise(origin).startswith("https://"), F.lit("https")
-    ).otherwise(F.lit("http"))
-    nl_raw = F.when(is_abs, nl_a).otherwise(nl_rel)
-    p_raw = F.when(is_abs, p_a).otherwise(p_rel)
-    p_out = F.when(p_raw == "", F.lit("/")).otherwise(p_raw)
-    fast = clean & (is_abs | root_ok | plain_ok)
-    if parity:
-        # normalize drops query+fragment wholesale
-        url = F.when(is_abs, h_pre).otherwise(F.concat(origin, p_rel))
-        return fast, url, nl_raw, p_out
-    q_ok = ~has_q | (h_q == "") | h_q.rlike(_SORTABLE_Q)
-    fast = fast & q_ok
-    nl = F.lower(nl_raw)
-    nls = (
-        F.when((sch == "http") & nl.endswith(":80"), F.regexp_replace(nl, ":80$", ""))
-        .when((sch == "https") & nl.endswith(":443"), F.regexp_replace(nl, ":443$", ""))
-        .otherwise(nl)
-    )
-    q_sorted = F.when(
-        has_q & (h_q != ""),
-        F.concat(F.lit("?"), F.array_join(F.array_sort(F.split(h_q, "&")), "&")),
-    ).otherwise(F.lit(""))
-    url = F.concat(sch, F.lit("://"), nls, p_out, q_sorted)
-    return fast, url, nl, p_out
-
-
-def attach_canon_links(
-    df, base_col: str, href_col: str, parity: bool = True, include_path: bool = True
-):
-    """df + canonical (url, host[, path]) columns — the HYBRID hot path.
-
-    Fast-path rows (the overwhelming majority of real link batches) are
-    canonicalized entirely in whole-stage codegen by ``_jvm_canon``; only
-    residue rows' strings cross Arrow into the pandas kernel — the UDF's
-    inputs are NULLed for fast rows, so the Arrow batch carries validity
-    bits instead of string bytes, and ``_canon_links_pd`` short-circuits
-    the all-null rows. The slow struct is materialized as its own
-    projection column so CollapseProject cannot clone the (non-cheap)
-    PythonUDF into each field reference — one Arrow crossing per batch.
-    """
-    b, h = F.col(base_col), F.col(href_col)
-    fast, jvm_url, jvm_host, jvm_path = _jvm_canon(b, h, parity)
-    udf = canon_links_flat_udf(parity, include_path)
-    df = df.withColumn("_cl_fast", fast).withColumn(
-        "_cl_slow",
-        udf(
-            F.when(F.col("_cl_fast"), F.lit(None).cast("string")).otherwise(b),
-            F.when(F.col("_cl_fast"), F.lit(None).cast("string")).otherwise(h),
-        ),
-    )
-    out = df.withColumn(
-        "url", F.when(F.col("_cl_fast"), jvm_url).otherwise(F.col("_cl_slow.url"))
-    ).withColumn("host", F.when(F.col("_cl_fast"), jvm_host).otherwise(F.col("_cl_slow.host")))
-    if include_path:
-        out = out.withColumn(
-            "path", F.when(F.col("_cl_fast"), jvm_path).otherwise(F.col("_cl_slow.path"))
-        )
-    return out.drop("_cl_fast", "_cl_slow")
 
 
 def allowed_domain_filter(host_col, allowed_domains: tuple[str, ...], parity: bool = True):

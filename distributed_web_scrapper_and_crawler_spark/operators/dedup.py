@@ -34,12 +34,6 @@ from distributed_web_scrapper_and_crawler_spark.functions.text import (
 from distributed_web_scrapper_and_crawler_spark.operators.spread import spread_small_scan
 
 
-def _spread_small_scan(df: DataFrame) -> DataFrame:
-    """Small-input scan-parallelism guard — see operators/spread.py (the
-    shared implementation; re-exported here for the existing callers)."""
-    return spread_small_scan(df)
-
-
 def _char_ngrams_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, shingle) rows via explode(sequence)+substr — whole-stage-codegen
     shingling. The higher-order ``transform`` in functions.char_ngrams does
@@ -89,11 +83,11 @@ def shingle_table(
     min over a multiset equals min over the set, so the minhash path
     skips the distinct entirely (round-5 ledger, PLANS.md)."""
     if local_distinct:
-        return _spread_small_scan(df).select(
+        return spread_small_scan(df).select(
             F.col(id_col).alias("id"),
             F.explode(F.array_distinct(char_ngrams(text_col, n))).alias("shingle"),
         )
-    return _char_ngrams_rows(_spread_small_scan(df), id_col, text_col, n).distinct()
+    return _char_ngrams_rows(spread_small_scan(df), id_col, text_col, n).distinct()
 
 
 # Above this many documents the per-doc size table (2 longs/doc) stops
@@ -132,7 +126,7 @@ def ngram_jaccard_pairs(
     # analog is writing the inverted index doc-major before the
     # pair-generation pass.
     docarr = (
-        _spread_small_scan(df)
+        spread_small_scan(df)
         .select(
             F.col(id_col).alias("id"),
             F.array_distinct(char_ngrams(text_col, n)).alias("_arr"),
@@ -267,7 +261,11 @@ def minhash_table(
     """
     if shape not in ("long", "wide"):
         raise ValueError(f"minhash_table: unknown shape {shape!r}")
-    sh = _char_ngrams_rows(_spread_small_scan(df), id_col, text_col, ngram)
+    # NULL text shingles as '' so both shapes hash "{h}#" for it, like the
+    # DuckDB oracle's concat(h, '#', shingle): a NULL shingle would vanish
+    # in the vocab join but hash as the bare seed "{h}" inline
+    text = F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
+    sh = _char_ngrams_rows(spread_small_scan(df).select(id_col, text), id_col, text_col, ngram)
     if vocab_cap is not None and _plan_size_bytes(df) >= vocab_min_bytes:
         # materialize (tiny) so the count probe and the hash-table build
         # don't each re-run the distinct pass; limit caps the job early
@@ -329,11 +327,12 @@ def lsh_candidate_pairs(
 
     Contract: ``minhash`` holds exactly h = 0 .. bands*rows_per_band - 1
     per id (i.e. it was built with n_hashes == bands * rows_per_band —
-    every registry caller and the SQL oracles satisfy this). Rows with h
-    outside that range would be silently ignored (the pre-round-7 code
-    derived extra bands from them instead). ``minhash`` may be either
-    the long (id, h, minhash) table or minhash_table's ``shape="wide"``
-    output — the wide form skips the re-pivot here.
+    every registry caller and the SQL oracles satisfy this). A long-input
+    row with h outside that range fails the query (``assert_true`` inside
+    the pivot, no extra job) instead of being silently ignored.
+    ``minhash`` may be either the long (id, h, minhash) table or
+    minhash_table's ``shape="wide"`` output — the wide form skips the
+    re-pivot here.
 
     Execution shape (round-7, guide §2.3/§2.4 — output-identical to the
     previous band-string self-join + distinct):
@@ -360,7 +359,15 @@ def lsh_candidate_pairs(
     if set(minhash.columns) == {"id", *(f"_s{h}" for h in range(n_h))}:
         wide = minhash  # already the wide signature table
     else:
-        wide = _minhash_pivot(minhash, n_h)
+        in_range = F.assert_true(
+            F.col("h").between(0, n_h - 1),
+            f"lsh_candidate_pairs: minhash h must be in 0..{n_h - 1} "
+            f"(bands * rows_per_band = {n_h})",
+        )
+        # assert_true yields NULL when it passes: coalescing it into the
+        # pivoted value keeps the check in the pivot's own scan
+        checked = minhash.withColumn("minhash", F.coalesce(in_range, F.col("minhash")))
+        wide = _minhash_pivot(checked, n_h)
     # both self-join sides read this; materialize once (same
     # no-exchange-reuse rationale as ngram_jaccard_pairs)
     wide = wide.localCheckpoint()
@@ -411,7 +418,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     """SimHash fingerprint: per bit b, sign of sum over tokens of
     (+1 if md5_long(token) has bit b else -1); token multiplicity counts.
     Returns (id, simhash int)."""
-    toks = _spread_small_scan(df).select(
+    toks = spread_small_scan(df).select(
         F.col(id_col).alias("id"), F.explode(tokens_ws(text_col)).alias("tok")
     )
     hv = toks.withColumn("hv", md5_long(F.col("tok")))

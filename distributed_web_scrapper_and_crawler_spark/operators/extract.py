@@ -16,132 +16,81 @@ All families absolutize with ``urljoin(base_url, href)``
 (remote_worker.py:216, distributed_crawler.py:234). ``media`` spans are
 recorded but never enqueued (the reference never fetches images).
 
-Spark shape: one vectorized Arrow UDF per document returning
-``ARRAY<STRUCT<url, depth_delta, pos>>`` followed by ``posexplode`` —
-the UDTF-equivalent. Field extraction (config.yaml:9-27 analog) is a
-second Series→struct pandas UDF. No per-row Python UDFs anywhere.
+Spark shape (``link_rows``): kind filter, offset sort and depth delta in
+codegen, one vectorized Arrow canonicalize call per document, then
+``posexplode`` — the UDTF-equivalent. Field extraction (config.yaml:9-27
+analog) is a Series→struct pandas UDF. No per-row Python UDFs anywhere.
 """
 
 from __future__ import annotations
 
 from functools import lru_cache
-from urllib.parse import urljoin
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_web_scrapper_and_crawler_spark.config import ExtractionRule
-
-_LINK_DELTA = {"link_book": 1, "link_next": 0, "link_cat": 0}
-
-_LINKS_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("depth_delta", T.IntegerType()),
-            T.StructField("pos", T.IntegerType()),
-        ]
-    )
-)
+from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import canon_links_doc_udf
 
 
-def extract_links_udf():
-    """pandas UDF (doc_url, spans) -> array<struct<url, depth_delta, pos>>.
+def link_rows(fetched: DataFrame, parity: bool, need_path: bool) -> DataFrame:
+    """The round's link table: one row per link span of each fetched doc,
+    ``(parent_seq, depth, pos, url, host[, path])``.
 
-    ``pos`` is the link's rank among the document's link spans ordered by
-    ``offset`` — the deterministic stand-in for the reference's "insertion
-    order while iterating soup.select(...)", and the tiebreak that makes
-    crawl ordering total (SURVEY.md §3.3).
+    ``fetched`` carries ``(seq, depth, url, spans)`` per document. Kind
+    filter, offset sort, ``pos`` rank and the depth delta stay in
+    whole-stage codegen; the Arrow crossing is at DOC granularity
+    (VERDICT r4 #3): the base URL ships once per document and its hrefs
+    as one ``array<string>`` into ``canon_links_doc_udf``, whose
+    parallel-array outputs are re-aligned with the kinds by
+    ``arrays_zip`` (the kernel is order-preserving) and exploded AFTER
+    the kernel. ``pos`` is the link's rank among the document's link
+    spans ordered by ``offset`` — the deterministic stand-in for the
+    reference's soup.select iteration order, and the tiebreak that makes
+    crawl ordering total (SURVEY.md §3.3). ``path`` is computed only when
+    ``need_path`` (robots enforcement reads it): a third string column
+    over the round's biggest intermediate is pure transfer cost
+    otherwise.
     """
-
-    @F.pandas_udf(_LINKS_SCHEMA)
-    def _extract(doc_urls: pd.Series, spans_col: pd.Series) -> pd.Series:
-        out = []
-        for base, spans in zip(doc_urls, spans_col):
-            if spans is None:
-                out.append([])
-                continue
-            links = []
-            pos = 0
-            for sp in sorted(spans, key=lambda s: s["offset"]):
-                delta = _LINK_DELTA.get(sp["kind"])
-                if delta is None:
-                    continue
-                href = sp["text"]
-                # unconditional, like the reference (distributed_crawler.py:
-                # 234,245,256): urljoin's urlunsplit round-trip also strips
-                # tab/CR/LF and drops empty ?/# from absolute hrefs
-                absu = urljoin(base, href)
-                links.append({"url": absu, "depth_delta": delta, "pos": pos})
-                pos += 1
-            out.append(links)
-        return pd.Series(out)
-
-    return _extract
-
-
-_LINKS_CANON_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("host", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("depth_delta", T.IntegerType()),
-            T.StructField("pos", T.IntegerType()),
-        ]
+    link_spans = F.expr(
+        "array_sort(filter(spans, s -> s.kind IN ('link_book', 'link_next', 'link_cat')),"
+        " (a, b) -> CASE WHEN a.offset < b.offset THEN -1 WHEN a.offset > b.offset THEN 1 ELSE 0 END)"
     )
-)
-
-
-def extract_links_canon_udf(parity: bool = True):
-    """Fused link extraction + urljoin + canonicalization — ONE Arrow
-    crossing for the hot path (the per-round links table is the biggest
-    intermediate; two separate pandas-UDF stages measurably dominate
-    round time). Semantics identical to extract_links_udf followed by
-    canonicalize_udf; parity asserted by tests/test_extract.py."""
-    from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import (
-        canonicalize_url_py,
-        normalize_url_py,
+    canon_doc = canon_links_doc_udf(parity, need_path)
+    doc = fetched.select(
+        F.col("seq").alias("parent_seq"),
+        F.col("depth").alias("parent_depth"),
+        F.col("url").alias("_base"),
+        link_spans.alias("_spans"),
+    ).withColumn("_c", canon_doc(F.col("_base"), F.expr("transform(_spans, s -> s.text)")))
+    doc = (
+        doc.withColumn("_kinds", F.expr("transform(_spans, s -> s.kind)"))
+        .withColumn("_urls", F.col("_c.urls"))
+        .withColumn("_hosts", F.col("_c.hosts"))
     )
-    from urllib.parse import urlsplit
-
-    canon = normalize_url_py if parity else canonicalize_url_py
-
-    @F.pandas_udf(_LINKS_CANON_SCHEMA)
-    def _extract(doc_urls: pd.Series, spans_col: pd.Series) -> pd.Series:
-        out = []
-        for base, spans in zip(doc_urls, spans_col):
-            if spans is None:
-                out.append([])
-                continue
-            links = []
-            pos = 0
-            for sp in sorted(spans, key=lambda s: s["offset"]):
-                delta = _LINK_DELTA.get(sp["kind"])
-                if delta is None:
-                    continue
-                href = sp["text"]
-                # unconditional urljoin — reference-exact (see extract_links_udf)
-                absu = urljoin(base, href)
-                s = urlsplit(absu)
-                links.append(
-                    {
-                        # parity: RAW netloc (reference allow-filter is
-                        # case-sensitive, distributed_crawler.py:67-73)
-                        "url": canon(absu),
-                        "host": s.netloc if parity else s.netloc.lower(),
-                        "path": s.path or "/",
-                        "depth_delta": delta,
-                        "pos": pos,
-                    }
-                )
-                pos += 1
-            out.append(links)
-        return pd.Series(out)
-
-    return _extract
+    zip_cols = ["_kinds", "_urls", "_hosts"]
+    if need_path:
+        doc = doc.withColumn("_paths", F.col("_c.paths"))
+        zip_cols.append("_paths")
+    return doc.select(
+        "parent_seq",
+        "parent_depth",
+        F.posexplode(F.arrays_zip(*zip_cols)).alias("pos", "_z"),
+    ).select(
+        "parent_seq",
+        (
+            F.col("parent_depth")
+            + F.when(F.col("_z._kinds") == "link_book", F.lit(1)).otherwise(F.lit(0))
+        )
+        .cast("int")
+        .alias("depth"),
+        F.col("pos").cast("int").alias("pos"),
+        F.col("_z._urls").alias("url"),
+        F.col("_z._hosts").alias("host"),
+        *([F.col("_z._paths").alias("path")] if need_path else []),
+    )
 
 
 @lru_cache(maxsize=8)

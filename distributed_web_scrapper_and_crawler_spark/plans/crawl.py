@@ -8,8 +8,7 @@ so iterative unions don't stack into an ever-deeper plan.
 
 from __future__ import annotations
 
-import os
-
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -308,14 +307,9 @@ class CrawlEngine:
             )
             if res.drained:
                 break
-            import time as _time
-
-            _t = _time.monotonic()
-            _t_abs = _time.time()
+            t = time.monotonic()
             self._materialize(res)
-            res.stats.setdefault("phases", {})["materialize"] = round(_time.monotonic() - _t, 3)
-            if os.environ.get("DWSC_PHASE_ABS"):
-                res.stats.setdefault("phases_abs", {})["materialize"] = (_t_abs, _time.time())
+            res.stats.setdefault("phases", {})["materialize"] = round(time.monotonic() - t, 3)
             self.round_stats.append(res.stats)
             rounds_done += 1
         # with checkpoint_every > 1 the run may stop between durable rounds;
@@ -392,17 +386,7 @@ class CrawlEngine:
             }
             todo["enqueued"] = res.deltas["enqueued"].coalesce(npart(st["links_new"]))
             todo["pending"] = res.state.pending.coalesce(npart(res.state.pending_count))
-            if os.environ.get("DWSC_CONCURRENT_CKPT"):
-                # experimental: concurrent submission of the independent
-                # checkpoint jobs — measured SLOWER on local mode (jobs
-                # contend for the same executor threads and cache scans);
-                # kept behind a flag for real-cluster experiments.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=len(todo)) as ex:
-                    futs = {k: ex.submit(v.localCheckpoint) for k, v in todo.items()}
-                    d = {k: f.result() for k, f in futs.items()}
-            elif self.cfg.lazy_output_tables:
+            if self.cfg.lazy_output_tables:
                 # lazy (eager=False) checkpoints: materialization folds into
                 # the NEXT round's first action over each table (claim for
                 # pending, the dedup probe for enqueued) instead of costing

@@ -31,7 +31,6 @@ Scale notes (the 100 TB design points):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -39,12 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distributed_web_scrapper_and_crawler_spark.config import CrawlConfig
-from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import (
-    allowed_domain_filter,
-    attach_canon_links,
-    canon_links_doc_udf,
-    canon_links_flat_udf,
-)
+from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import allowed_domain_filter
 from distributed_web_scrapper_and_crawler_spark.operators.bloom import (
     NumpyBloom,
     add_df_to_filter,
@@ -52,6 +46,7 @@ from distributed_web_scrapper_and_crawler_spark.operators.bloom import (
 )
 from distributed_web_scrapper_and_crawler_spark.operators.extract import (
     extract_fields_udf,
+    link_rows,
     spans_sorted,
 )
 from distributed_web_scrapper_and_crawler_spark.plans.politeness import apply_robots, claim_batch
@@ -84,31 +79,16 @@ def run_round(
 
     round_broadcasts: list = []  # per-round shard broadcasts (released with caches)
     phase_t: dict[str, float] = {}
-    # diagnostic: absolute (epoch) phase windows so tools/phase_diag.py can
-    # intersect them with the Spark REST API's job intervals and attribute
-    # each phase's wall to "job running" vs "driver gap" (serial time)
-    phase_abs: dict[str, tuple[float, float]] = {}
-    _abs = bool(os.environ.get("DWSC_PHASE_ABS"))
 
-    # phase starts capture BOTH clocks (ADVICE r6 low): reconstructing the
-    # epoch start from a monotonic delta at mark time mixes clock domains —
-    # NTP slew between start and mark would skew the absolute window that
-    # tools/phase_diag.py intersects with Spark job intervals
-    def _now() -> tuple[float, float]:
-        return (time.monotonic(), time.time() if _abs else 0.0)
-
-    def _mark(name: str, t_start: float | tuple[float, float]) -> None:
-        mono0, epoch0 = t_start if isinstance(t_start, tuple) else (t_start, 0.0)
-        phase_t[name] = round(time.monotonic() - mono0, 3)
-        if _abs:
-            phase_abs[name] = (epoch0 or time.time() - phase_t[name], time.time())
+    def _mark(name: str, t_start: float) -> None:
+        phase_t[name] = round(time.monotonic() - t_start, 3)
 
     # exact pending_count is tracked arithmetically — drain detection is
     # free, no claim job needed to discover an empty frontier
     if state.pending_count == 0:
         return RoundResult(state, {}, {"round": rnd, "urls_claimed": 0}, drained=True)
 
-    t = _now()
+    t = time.monotonic()
     claim = claim_batch(state.pending, cfg).cache()
     n_claimed = claim.count()
     _mark("claim", t)
@@ -122,20 +102,17 @@ def run_round(
     # The claim batch is budget-bounded (small); the corpus is the 100 TB
     # side. Broadcasting the claim keeps the corpus UNSHUFFLED — without
     # it every round pays a full corpus exchange. On a real cluster the
-    # equivalent is a bucket join on the Iceberg corpus; flag off for
-    # unbounded claim batches.
+    # equivalent is a bucket join on the Iceberg corpus, which
+    # fetch_join="copartition" models (no bound on claim size).
     corpus_keyed = corpus.withColumnRenamed("doc_id", "url")
-    fetch_mode = cfg.fetch_join or ("broadcast" if cfg.broadcast_fetch else "shuffle")
-    if fetch_mode == "broadcast":
-        claim_side = F.broadcast(claim)
-    elif fetch_mode == "copartition":
+    if cfg.fetch_join == "copartition":
         # corpus is cached hash-partitioned on the key: only the ~budget-
         # sized claim side shuffles, and each task builds a tiny hash table
         # of its claim partition — removes the broadcast's driver-side
         # collect+build (serial per round at any cluster size)
         claim_side = claim.hint("shuffle_hash")
     else:
-        claim_side = claim
+        claim_side = F.broadcast(claim)
     # ONE left join yields both outcomes: matched rows are the fetch,
     # null-extended rows are the failures — the separate claim ⋈ fetched
     # anti-join used to cost a second join (and a second driver-side
@@ -157,100 +134,10 @@ def run_round(
     ).select("_f.*", "url", "depth", "round", "spans")
 
     # -- link extraction (the table-generating function, SURVEY.md §2.3) --
-    # JVM-side: prune non-link spans, sort by offset, posexplode — kind
-    # filter, pos rank and depth delta all stay in whole-stage codegen.
-    # Only TWO FLAT STRING COLUMNS (base url, href) cross Arrow into the
-    # vectorized canonicalize kernel — the old fused array<struct> UDF
-    # paid a per-doc struct->python-dict conversion plus per-link dict
-    # construction for the round's biggest intermediate (PLANS.md ledger).
-    # pos semantics unchanged: rank among link spans ordered by offset.
-    link_spans = F.expr(
-        "array_sort(filter(spans, s -> s.kind IN ('link_book', 'link_next', 'link_cat')),"
-        " (a, b) -> CASE WHEN a.offset < b.offset THEN -1 WHEN a.offset > b.offset THEN 1 ELSE 0 END)"
-    )
-    # canonicalization over two flat string columns. Default 'arrow': the
-    # vectorized pandas kernel — measured faster than per-row JVM regex on
-    # this box (config.py canon_impl note; PLANS.md round-4 ledger).
-    # 'hybrid': fast-path links canonicalize in whole-stage codegen and
-    # only residue strings cross Arrow (attach_canon_links). Either way,
-    # path is computed only when robots enforcement will read it — a third
-    # string column over the round's biggest intermediate is pure
-    # transfer cost otherwise.
+    # JVM-side kind filter, offset sort, pos rank and depth delta; one
+    # Arrow crossing per document into the vectorized canonicalize kernel
     need_path = bool(cfg.enforce_robots and robots is not None)
-    if cfg.resolved_links_kernel() == "doc":
-        # DOC granularity (VERDICT r4 #3): one Arrow crossing per document
-        # — base ships once, hrefs as one array<string>; outputs come back
-        # as parallel arrays and the explode happens AFTER the kernel, so
-        # pos/kind/depth still never leave codegen. arrays_zip aligns
-        # kinds with the kernel outputs positionally (the kernel is
-        # order-preserving by construction).
-        canon_doc = canon_links_doc_udf(cfg.parity_mode, need_path)
-        doc = fetched.select(
-            F.col("seq").alias("parent_seq"),
-            F.col("depth").alias("parent_depth"),
-            F.col("url").alias("_base"),
-            link_spans.alias("_spans"),
-        ).withColumn(
-            "_c", canon_doc(F.col("_base"), F.expr("transform(_spans, s -> s.text)"))
-        )
-        doc = (
-            doc.withColumn("_kinds", F.expr("transform(_spans, s -> s.kind)"))
-            .withColumn("_urls", F.col("_c.urls"))
-            .withColumn("_hosts", F.col("_c.hosts"))
-        )
-        zip_cols = ["_kinds", "_urls", "_hosts"]
-        if need_path:
-            doc = doc.withColumn("_paths", F.col("_c.paths"))
-            zip_cols.append("_paths")
-        links = doc.select(
-            "parent_seq",
-            "parent_depth",
-            F.posexplode(F.arrays_zip(*zip_cols)).alias("pos", "_z"),
-        ).select(
-            "parent_seq",
-            (
-                F.col("parent_depth")
-                + F.when(F.col("_z._kinds") == "link_book", F.lit(1)).otherwise(F.lit(0))
-            )
-            .cast("int")
-            .alias("depth"),
-            F.col("pos").cast("int").alias("pos"),
-            F.col("_z._urls").alias("url"),
-            F.col("_z._hosts").alias("host"),
-            *([F.col("_z._paths").alias("path")] if need_path else []),
-        )
-    else:
-        exploded = fetched.select(
-            F.col("seq").alias("parent_seq"),
-            F.col("depth").alias("parent_depth"),
-            F.col("url").alias("_base"),
-            F.posexplode(link_spans).alias("pos", "_sp"),
-        ).select(
-            "parent_seq",
-            (
-                F.col("parent_depth")
-                + F.when(F.col("_sp.kind") == "link_book", F.lit(1)).otherwise(F.lit(0))
-            )
-            .cast("int")
-            .alias("depth"),
-            F.col("pos").cast("int").alias("pos"),
-            "_base",
-            F.col("_sp.text").alias("_href"),
-        )
-        if cfg.canon_impl == "hybrid":
-            links = attach_canon_links(
-                exploded, "_base", "_href", parity=cfg.parity_mode, include_path=need_path
-            )
-        else:
-            canon_flat = canon_links_flat_udf(cfg.parity_mode, need_path)
-            links = exploded.withColumn("_l", canon_flat(F.col("_base"), F.col("_href")))
-            links = links.select(
-                *exploded.columns,
-                F.col("_l.url").alias("url"),
-                F.col("_l.host").alias("host"),
-                *([F.col("_l.path").alias("path")] if need_path else []),
-            )
-        links = links.drop("_base", "_href")
+    links = link_rows(fetched, cfg.parity_mode, need_path)
     # allow-filter on netloc substring — identical pre/post normalization
     # because normalize preserves netloc (distributed_crawler.py:67-78)
     links = links.filter(allowed_domain_filter(F.col("host"), cfg.allowed_domains, parity=cfg.parity_mode))
@@ -272,7 +159,7 @@ def run_round(
     # rides along, so the links_found stat costs one tiny job over the
     # (cached, already-unique) result instead of a count over the raw
     # links — extraction now runs exactly once per round.
-    t = _now()
+    t = time.monotonic()
     unique_links = (
         links.groupBy("url_hash", "url")
         .agg(
@@ -332,7 +219,7 @@ def run_round(
     # pass over the dedup pipeline; without the cache every downstream
     # consumer (bloom add, pending/enqueued deltas) re-runs the window +
     # anti-join + probe-UDF chain from scratch.
-    t = _now()
+    t = time.monotonic()
     candidates = new_links.cache()
     new_links, n_new = assign_global_seq(candidates, start=state.max_seq)
     _mark("dedup_seq", t)
@@ -365,12 +252,12 @@ def run_round(
         # Fold from the CACHED pre-seq candidates: the url_hash set is
         # identical to new_links', and reading new_links here would re-run
         # the seq window + offset join once more per round.
-        t = _now()
+        t = time.monotonic()
         add_df_to_filter(bloom, candidates, "url_hash")
         _mark("bloom_add", t)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
-    t = _now()
+    t = time.monotonic()
     n_fetched = (
         fetched.count() if (cfg.collect_stats and cfg.collect_fetch_stats) else -1
     )
@@ -384,7 +271,6 @@ def run_round(
         "dedup_hits": (n_links - n_new) if cfg.collect_stats else -1,
         "wall_ms": wall_ms,
         "phases": phase_t,
-        **({"phases_abs": phase_abs} if _abs else {}),
     }
     # uncollected stats persist as NULLs, never sentinels — a downstream
     # sum()/avg() over the metrics table must skip them, not mis-sum -1s

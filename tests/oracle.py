@@ -33,6 +33,25 @@ def is_allowed(url: str, allowed_domains: tuple[str, ...]) -> bool:
     return any(d in netloc for d in allowed_domains)
 
 
+def oracle_links(base: str, spans) -> list[tuple[str, int, int]]:
+    """Reference per-document link extraction: ``(abs_url, depth_delta,
+    pos)`` for each link span in offset order.
+
+    Three selector families with their depth deltas (remote_worker.py:
+    208-254); ``media`` and ``text`` spans are never enqueued. ``pos`` is
+    the rank among the document's link spans. Absolutization is the
+    reference's unconditional ``urljoin(base, href)``
+    (distributed_crawler.py:234,245,256): its urlunsplit round-trip also
+    strips tab/CR/LF and drops empty ?/# from absolute hrefs.
+    """
+    out = []
+    for sp in sorted(() if spans is None else spans, key=lambda sp: sp["offset"]):
+        delta = LINK_DELTA.get(sp["kind"])
+        if delta is not None:
+            out.append((urljoin(base, sp["text"]), delta, len(out)))
+    return out
+
+
 @dataclass
 class OracleResult:
     claim_order: list[str] = field(default_factory=list)  # FIFO, server.py:416-434
@@ -107,14 +126,7 @@ def crawl_oracle(
             "span_seq": [(sp["kind"], sp["text"], sp["media_ref"]) for sp in ordered],
         }
         # 3-family link extraction, in offset order
-        for sp in ordered:
-            delta = LINK_DELTA.get(sp["kind"])
-            if delta is None:
-                continue
-            href = sp["text"]
-            # unconditional urljoin, exactly like the reference
-            # (distributed_crawler.py:234,245,256)
-            absu = urljoin(url, href)
+        for absu, delta, _ in oracle_links(url, spans):
             enqueue(absu, depth + delta)
         res.statuses[url] = "completed"
         res.seen.add(url)  # visited AFTER success, distributed_crawler.py:265

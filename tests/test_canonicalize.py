@@ -124,8 +124,8 @@ _BASE_CASES = [
 
 
 def test_vectorized_canon_links_matches_stdlib():
-    """The flat vectorized kernel (crawl hot path, round.py link
-    extraction) must be byte-identical to urljoin + urlsplit +
+    """The vectorized kernel ``_canon_links_pd`` (crawl hot path, run by
+    the doc kernel inside link extraction) must be byte-identical to urljoin + urlsplit +
     normalize/canonicalize per row — including every fallback trigger
     (dot segments, protocol-relative, foreign schemes, query strings,
     mixed-case schemes, portful/pathless bases)."""
@@ -250,77 +250,12 @@ def test_allow_filter_case_sensitive_parity(spark):
     assert kept3 == 2
 
 
-def test_hybrid_jvm_canon_matches_kernel(spark):
-    """attach_canon_links' JVM fast path must be byte-identical to the
-    pandas kernel (and so to urljoin + normalize/canonicalize) over the
-    full fixture zoo, in both modes, with and without the path column —
-    and the fast-path coverage must be high (the hybrid's point is that
-    almost no strings cross Arrow)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import (
-        _canon_links_pd,
-        _jvm_canon,
-        attach_canon_links,
-    )
-
-    rows = [(b, h) for b in _BASE_CASES for h in _HREF_CASES]
-    df = spark.createDataFrame(rows, "b string, h string").coalesce(2)
-    for parity in (True, False):
-        want = _canon_links_pd(
-            pd.Series([r[0] for r in rows]), pd.Series([r[1] for r in rows]), parity
-        )
-        got = (
-            attach_canon_links(df, "b", "h", parity=parity, include_path=True)
-            .select("b", "h", "url", "host", "path")
-            .collect()
-        )
-        by_pair = {(r["b"], r["h"]): (r["url"], r["host"], r["path"]) for r in got}
-        for i, (b, h) in enumerate(rows):
-            w = want.iloc[i]
-            assert by_pair[(b, h)] == (w["url"], w["host"], w["path"]), (parity, b, h)
-        # no-path variant agrees on url/host
-        got2 = attach_canon_links(df, "b", "h", parity=parity, include_path=False).collect()
-        assert "path" not in got2[0].asDict()
-        by2 = {(r["b"], r["h"]): (r["url"], r["host"]) for r in got2}
-        for i, (b, h) in enumerate(rows):
-            w = want.iloc[i]
-            assert by2[(b, h)] == (w["url"], w["host"]), (parity, b, h)
-    # fast-path coverage on a bench-shaped batch: the JVM path must own
-    # root-relative, absolute, and sortable-query links
-    bench_rows = [
-        ("http://h0.example.test/catalogue/page/3", "/catalogue/item/7"),
-        ("http://h0.example.test/catalogue/page/3", "item/8.html"),
-        ("http://h0.example.test/catalogue/page/3", "http://h1.example.test/x"),
-        ("http://h0.example.test/catalogue/page/3", "/catalogue/item/9?b=2&a=1#frag"),
-    ]
-    bdf = spark.createDataFrame(bench_rows, "b string, h string")
-    for parity in (True, False):
-        fast, _, _, _ = _jvm_canon(F.col("b"), F.col("h"), parity)
-        n_fast = bdf.select(fast.alias("f")).filter("f").count()
-        assert n_fast == len(bench_rows), f"parity={parity}: {n_fast}/{len(bench_rows)} fast"
-
-
-def test_canon_impl_validated():
-    """A typo'd canon_impl must raise, not silently run the arrow path
-    (ADVICE r4 low #1)."""
-    import pytest as _pytest
-
-    from distributed_web_scrapper_and_crawler_spark.config import CrawlConfig
-
-    for bad in ("hybird", "jvm", ""):
-        with _pytest.raises(ValueError, match="canon_impl"):
-            CrawlConfig(canon_impl=bad)
-    CrawlConfig(canon_impl="hybrid")  # both legal values construct fine
-    CrawlConfig(canon_impl="arrow")
-
-
-def test_doc_kernel_matches_flat_kernel(spark):
+def test_doc_kernel_matches_canon_links_pd(spark):
     """canon_links_doc_udf (one Arrow crossing per DOCUMENT, parallel-array
-    outputs — VERDICT r4 #3) must be byte-identical to the flat kernel over
-    the full fixture zoo, in both modes, with and without paths, including
-    ragged docs (0-link documents must yield empty arrays, not nulls)."""
+    outputs — VERDICT r4 #3) must be byte-identical to ``_canon_links_pd``
+    run on the flattened (base, href) pairs, over the full fixture zoo, in
+    both modes, with and without paths, including ragged docs (0-link
+    documents must yield empty arrays, not nulls)."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -331,8 +266,8 @@ def test_doc_kernel_matches_flat_kernel(spark):
 
     # one "document" per base carrying the whole href zoo, plus a 0-link doc
     # and a NULL-array doc (a null spans column upstream yields hrefs=NULL;
-    # the kernel must emit empty arrays, matching the flat kernel's
-    # posexplode drop, not kill the Python worker — ADVICE r5 medium)
+    # the kernel must emit empty arrays, not kill the Python worker —
+    # ADVICE r5 medium)
     docs = [(b, list(_HREF_CASES)) for b in _BASE_CASES]
     docs.append(("http://empty.example.test/", []))
     docs.append(("http://nullspans.example.test/", None))
@@ -345,7 +280,7 @@ def test_doc_kernel_matches_flat_kernel(spark):
                 for r in df.withColumn("_c", udf(F.col("b"), F.col("hs"))).collect()
             }
             for b, hs in docs:
-                hs = hs or []  # null array ≡ zero links (flat-kernel drop)
+                hs = hs or []  # null array ≡ zero links
                 want = _canon_links_pd(
                     pd.Series([b] * len(hs)), pd.Series(list(hs)), parity
                 )
@@ -356,22 +291,3 @@ def test_doc_kernel_matches_flat_kernel(spark):
                     assert list(c["paths"]) == list(want["path"]), (parity, b)
                 else:
                     assert "paths" not in c.asDict()
-
-
-def test_links_kernel_validated():
-    """links_kernel typos must raise; doc granularity requires the arrow
-    canon path (hybrid canonicalizes after the explode)."""
-    import pytest as _pytest
-
-    from distributed_web_scrapper_and_crawler_spark.config import CrawlConfig
-
-    with _pytest.raises(ValueError, match="links_kernel"):
-        CrawlConfig(links_kernel="docs")
-    with _pytest.raises(ValueError, match="links_kernel='doc'"):
-        CrawlConfig(links_kernel="doc", canon_impl="hybrid")
-    CrawlConfig(links_kernel="doc")
-    CrawlConfig(links_kernel="flat", canon_impl="hybrid")
-    # 'auto' resolves per canon path: doc under arrow, flat under hybrid
-    assert CrawlConfig().resolved_links_kernel() == "doc"
-    assert CrawlConfig(canon_impl="hybrid").resolved_links_kernel() == "flat"
-    assert CrawlConfig(links_kernel="flat").resolved_links_kernel() == "flat"

@@ -116,6 +116,16 @@ def test_copartition_fetch_join_parity(spark, small_corpus, seeds, eng_full):
     keyed.unpersist()
 
 
+def test_fetch_join_validated():
+    """An unknown fetch_join must raise, not silently run a join the
+    caller did not ask for."""
+    for bad in ("copartion", "shuffle", None):
+        with pytest.raises(ValueError, match="fetch_join"):
+            CrawlConfig(fetch_join=bad)
+    assert CrawlConfig().fetch_join == "broadcast"
+    CrawlConfig(fetch_join="copartition")
+
+
 def test_degraded_cuckoo_stays_correct(spark, small_corpus, seeds, eng_full):
     """A degraded cuckoo filter (overflow or delete => false negatives
     possible; the flag itself is unit-tested in test_bloom) must route
@@ -135,32 +145,5 @@ def test_interrupted_equals_uninterrupted(spark, small_corpus, seeds, eng_full):
     part.run()  # continue to drain
     assert part.claim_order() == eng_full.claim_order()
     a = {r["url"] for r in part.state.seen.collect()}
-    b = {r["url"] for r in eng_full.state.seen.collect()}
-    assert a == b
-
-
-def test_hybrid_canon_engine_full_parity(spark, small_corpus, oracle, seeds):
-    """canon_impl='hybrid' (JVM fast path + residue-only Arrow) must crawl
-    identically: claim-for-claim prefix parity vs the serial oracle
-    (bounded rounds — the expression-level byte-equality is already
-    pinned exhaustively by test_canonicalize's hybrid sweep; this proves
-    the round-plan wiring)."""
-    eng = _run_engine(spark, small_corpus, seeds, budget=64, max_rounds=3, canon_impl="hybrid")
-    got = eng.claim_order()
-    assert len(got) > 0
-    assert got == oracle.claim_order[: len(got)]
-
-
-def test_doc_links_kernel_engine_full_parity(spark, small_corpus, oracle, seeds, eng_full):
-    """The flat and doc links kernels must crawl identically. eng_full runs
-    the DEFAULT (auto -> doc, the round-5 measured winner); this engine
-    pins links_kernel='flat' — full-drain claim-for-claim parity vs the
-    serial oracle plus a seen-set equal to the doc run's keeps BOTH
-    granularities covered (the kernel-level byte-equality is pinned by
-    test_canonicalize's doc-kernel sweep; this proves the round-plan
-    wiring, pos/depth re-alignment included)."""
-    eng = _run_engine(spark, small_corpus, seeds, budget=64, links_kernel="flat")
-    assert eng.claim_order() == oracle.claim_order
-    a = {r["url"] for r in eng.state.seen.collect()}
     b = {r["url"] for r in eng_full.state.seen.collect()}
     assert a == b

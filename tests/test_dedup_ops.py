@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from distributed_web_scrapper_and_crawler_spark.operators import ann, dedup
+from distributed_web_scrapper_and_crawler_spark.operators.spread import spread_small_scan
 
 
 def _docs(spark, rows):
@@ -77,6 +78,22 @@ def test_lsh_band_signature_injective_at_r4(spark):
     assert {(1, 2)} == {
         (r["a"], r["b"]) for r in dedup.lsh_candidate_pairs(mh2, bands=1, rows_per_band=2).collect()
     }
+
+
+def test_lsh_long_input_h_out_of_range_raises(spark):
+    """A long minhash row with h outside 0..bands*rows_per_band-1 must fail
+    the query, not be silently dropped by the pivot."""
+    import pytest
+
+    mh = spark.createDataFrame(
+        [(1, 0, 10), (1, 1, 30), (2, 0, 10), (2, 1, 30), (2, 2, 99)],
+        "id long, h int, minhash long",
+    )
+    with pytest.raises(Exception, match="minhash h must be in 0..1"):
+        dedup.lsh_candidate_pairs(mh, bands=1, rows_per_band=2).collect()
+    negative = spark.createDataFrame([(1, -1, 10)], "id long, h int, minhash long")
+    with pytest.raises(Exception, match="minhash h must be in"):
+        dedup.lsh_candidate_pairs(negative, bands=1, rows_per_band=2).collect()
 
 
 def test_ivf_centroid_cap_raises(spark):
@@ -274,10 +291,10 @@ def test_spread_small_scan_guard(spark):
     """Single-partition inputs are repartitioned to defaultParallelism;
     already-parallel inputs pass through without an added exchange."""
     tiny = spark.range(100).coalesce(1).withColumn("text", F.lit("abcdefghijkl"))
-    spread = dedup._spread_small_scan(tiny)
+    spread = spread_small_scan(tiny)
     assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     wide = spark.range(1000).repartition(spark.sparkContext.defaultParallelism + 3)
-    assert dedup._spread_small_scan(wide) is wide
+    assert spread_small_scan(wide) is wide
 
 
 def test_minhash_vocab_path_equals_inline_path(spark):
@@ -291,6 +308,7 @@ def test_minhash_vocab_path_equals_inline_path(spark):
             (2, "the quick brown fox jumps over the lazy cat"),
             (7, "completely different text with its own shingles"),
             (9, "zz"),  # shorter than the gram => single short shingle
+            (11, None),  # NULL text shingles as '' on both paths
         ],
     )
     via_vocab = dedup.minhash_table(
@@ -298,6 +316,12 @@ def test_minhash_vocab_path_equals_inline_path(spark):
     )
     inline = dedup.minhash_table(df, "doc_id", "text", n_hashes=8, ngram=8, vocab_cap=None)
     assert sorted(map(tuple, via_vocab.collect())) == sorted(map(tuple, inline.collect()))
+    # the NULL doc keeps all 8 signatures: md5 of "{h}#", the DuckDB
+    # oracle's concat(h, '#', shingle) with an empty shingle
+    null_sigs = {r["h"]: r["minhash"] for r in inline.filter("id = 11").collect()}
+    empty = _docs(spark, [(11, "")])
+    want = dedup.minhash_table(empty, "doc_id", "text", n_hashes=8, ngram=8, vocab_cap=None)
+    assert null_sigs == {r["h"]: r["minhash"] for r in want.collect()}
     # a cap below the true vocabulary falls back to the inline path
     fallback = dedup.minhash_table(
         df, "doc_id", "text", n_hashes=8, ngram=8, vocab_cap=3, vocab_min_bytes=0

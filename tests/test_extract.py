@@ -1,19 +1,26 @@
 """Link/field extraction semantics: the 3 selector families, depth deltas,
-urljoin, offset ordering, media exclusion, and fused == unfused."""
+urljoin, offset ordering, media exclusion — the engine's link path
+checked against the serial oracle's — and field extraction."""
 
 from __future__ import annotations
 
+from urllib.parse import urlsplit
+
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from distributed_web_scrapper_and_crawler_spark.config import DEFAULT_EXTRACTION_RULES
-from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import normalize_url_py
+from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import (
+    canonicalize_url_py,
+    normalize_url_py,
+)
 from distributed_web_scrapper_and_crawler_spark.operators.extract import (
     extract_fields_udf,
-    extract_links_canon_udf,
-    extract_links_udf,
+    link_rows,
     spans_sorted,
 )
 from distributed_web_scrapper_and_crawler_spark.sources.corpus import CORPUS_SPARK_SCHEMA
+from tests.oracle import oracle_links
 
 DOC = {
     "doc_id": "http://h.example.test/page/1",
@@ -35,78 +42,62 @@ def _df(spark):
     return spark.createDataFrame(pd.DataFrame([DOC]), schema=CORPUS_SPARK_SCHEMA)
 
 
-def test_three_families_and_depth_deltas(spark):
-    rows = (
-        _df(spark)
-        .select(F.explode(extract_links_udf()(F.col("doc_id"), F.col("spans"))).alias("l"))
-        .select("l.*")
-        .collect()
+# the round's link path on adversarial hrefs: mixed-case host and scheme,
+# default port, unsorted query, dot segments, tab/CR inside the href, an
+# out-of-domain host — plus a document with no link spans at all
+ODD_DOC = {
+    "doc_id": "http://h.example.test/a/b/page",
+    "spans": [
+        {"kind": "link_cat", "text": "HTTP://H.Example.TEST:80/Cat/4?z=1&a=2#x", "media_ref": "", "offset": 5},
+        {"kind": "link_book", "text": "../up/./item?b=&a=1", "media_ref": "", "offset": 3},
+        {"kind": "media", "text": "/img.png", "media_ref": "http://h.example.test/img.png", "offset": 4},
+        {"kind": "link_next", "text": "next\tpa\rge", "media_ref": "", "offset": 7},
+        {"kind": "link_book", "text": "https://evil.test:443/x", "media_ref": "", "offset": 9},
+    ],
+}
+NO_LINKS_DOC = {
+    "doc_id": "http://h.example.test/empty",
+    "spans": [{"kind": "text", "text": "title=Empty", "media_ref": "", "offset": 0}],
+}
+
+
+def test_link_rows_matches_oracle(spark):
+    """``link_rows`` (the link path run_round executes) must emit exactly
+    the reference's per-document extraction — ``oracle_links``, then
+    normalize (parity) or canonicalize (production) — in both modes, with
+    and without paths: url, host, depth, pos, and no media span."""
+    import pandas as pd
+
+    docs = [DOC, ODD_DOC, NO_LINKS_DOC]
+    seq_of = {d["doc_id"]: 10 * (i + 1) for i, d in enumerate(docs)}
+    # the fetched rows run_round hands over: (seq, depth, url, spans)
+    schema = T.StructType([T.StructField("seq", T.LongType()), *CORPUS_SPARK_SCHEMA.fields])
+    pdf = pd.DataFrame([{"seq": seq_of[d["doc_id"]], **d} for d in docs])
+    fetched = spark.createDataFrame(pdf, schema=schema).select(
+        "seq", F.lit(2).alias("depth"), F.col("doc_id").alias("url"), "spans"
     )
-    # offset order: link_next(10) pos0, link_book(30) pos1, link_cat(40) pos2
-    got = [(r["url"], r["depth_delta"], r["pos"]) for r in rows]
-    assert got == [
+    # reference golden case: offset order, three families, media skipped
+    assert oracle_links(DOC["doc_id"], DOC["spans"]) == [
         ("http://h.example.test/page/2", 0, 0),  # pagination: same depth (remote_worker.py:236)
         ("http://h.example.test/page/2?b=2&a=1#f", 1, 1),  # book: depth+1 (:220), urljoin'd
         ("http://h.example.test/cat/3", 0, 2),  # category: same depth (:252)
     ]
-    # media span NOT emitted (reference never fetches images)
-    assert len(rows) == 3
-
-
-def test_fused_equals_unfused_plus_normalize(spark):
-    unfused = (
-        _df(spark)
-        .select(F.explode(extract_links_udf()(F.col("doc_id"), F.col("spans"))).alias("l"))
-        .select("l.url", "l.depth_delta", "l.pos")
-        .collect()
-    )
-    fused = (
-        _df(spark)
-        .select(F.explode(extract_links_canon_udf(parity=True)(F.col("doc_id"), F.col("spans"))).alias("l"))
-        .select("l.url", "l.depth_delta", "l.pos", "l.host", "l.path")
-        .collect()
-    )
-    assert [(normalize_url_py(r["url"]), r["depth_delta"], r["pos"]) for r in unfused] == [
-        (r["url"], r["depth_delta"], r["pos"]) for r in fused
-    ]
-    assert all(r["host"] == "h.example.test" for r in fused)
-    assert fused[2]["path"] == "/cat/3"
-
-
-def test_flat_link_path_equals_fused(spark):
-    """The round plan's flat link path (JVM filter+array_sort+posexplode +
-    vectorized (base, href) canonicalize, plans/round.py) must emit exactly
-    what the fused array<struct> UDF emits — url, host, path, depth delta
-    and pos — in both modes."""
-    from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import (
-        canon_links_flat_udf,
-    )
-
     for parity in (True, False):
-        fused = (
-            _df(spark)
-            .select(
-                F.explode(extract_links_canon_udf(parity=parity)(F.col("doc_id"), F.col("spans"))).alias("l")
-            )
-            .select("l.url", "l.host", "l.path", "l.depth_delta", "l.pos")
-            .collect()
-        )
-        link_spans = F.expr(
-            "array_sort(filter(spans, s -> s.kind IN ('link_book', 'link_next', 'link_cat')),"
-            " (a, b) -> CASE WHEN a.offset < b.offset THEN -1 WHEN a.offset > b.offset THEN 1 ELSE 0 END)"
-        )
-        flat = (
-            _df(spark)
-            .select(F.col("doc_id").alias("_base"), F.posexplode(link_spans).alias("pos", "_sp"))
-            .select(
-                canon_links_flat_udf(parity=parity)(F.col("_base"), F.col("_sp.text")).alias("_l"),
-                F.when(F.col("_sp.kind") == "link_book", F.lit(1)).otherwise(F.lit(0)).alias("depth_delta"),
-                F.col("pos").cast("int").alias("pos"),
-            )
-            .select("_l.url", "_l.host", "_l.path", "depth_delta", "pos")
-            .collect()
-        )
-        assert [tuple(r) for r in flat] == [tuple(r) for r in fused], f"parity={parity}"
+        canon = normalize_url_py if parity else canonicalize_url_py
+        want = []
+        for d in docs:
+            for absu, delta, pos in oracle_links(d["doc_id"], d["spans"]):
+                s = urlsplit(absu)
+                host = s.netloc if parity else s.netloc.lower()
+                want.append((seq_of[d["doc_id"]], 2 + delta, pos, canon(absu), host, s.path or "/"))
+        assert len(want) == 7  # 3 + 4 links; media and text spans never emitted
+        for need_path in (True, False):
+            rows = link_rows(fetched, parity, need_path).collect()
+            got = sorted(tuple(r) for r in rows)
+            expect = sorted(w if need_path else w[:5] for w in want)
+            assert got == expect, (parity, need_path)
+            cols = ["parent_seq", "depth", "pos", "url", "host"] + (["path"] if need_path else [])
+            assert rows[0].__fields__ == cols
 
 
 def test_field_extraction_first_match_and_strip(spark):

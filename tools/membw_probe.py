@@ -1,8 +1,8 @@
 """Memory-bandwidth ceiling probe for the sandbox box.
 
 The crawl's 2-vs-8-core scaling pair reads ~0.63 while per-phase CPU
-sampling (tools/phase_diag.py) shows ~7.6 of 8 cores busy with CPU-seconds
-inflated ~2.3x vs the 2-core run — the signature of memory-stall cycles,
+sampling shows ~7.6 of 8 cores busy with CPU-seconds inflated ~2.3x vs
+the 2-core run — the signature of memory-stall cycles,
 not idle cores. This probe measures the machine's aggregate copy/triad
 bandwidth at 1/2/4/8/16 pinned processes: if aggregate GB/s saturates
 well below 8 cores, an N-vs-4N single-box pair under-reads the efficiency
@@ -48,13 +48,15 @@ def _steal() -> int:
 def run_level(n_procs: int) -> tuple[float, int]:
     q = mp.Queue()
     s0 = _steal()
-    # clamp pin targets to the actual affinity mask (ADVICE r6 low: a cpu
+    # pin targets come from the actual affinity mask (ADVICE r6 low: a cpu
     # id beyond the mask makes sched_setaffinity raise in the worker, and
-    # a bare q.get() would then block forever)
+    # a bare q.get() would then block forever). One worker per cpu: two
+    # workers sharing a cpu would halve each one's rate and read as a
+    # bandwidth ceiling.
     avail = sorted(os.sched_getaffinity(0))
-    procs = [
-        mp.Process(target=worker, args=(avail[i % len(avail)], q)) for i in range(n_procs)
-    ]
+    if n_procs > len(avail):
+        raise ValueError(f"{n_procs} procs > {len(avail)} cpus in the affinity mask")
+    procs = [mp.Process(target=worker, args=(avail[i], q)) for i in range(n_procs)]
     for p in procs:
         p.start()
     rates = []
@@ -74,8 +76,15 @@ def main() -> None:
     import sys
 
     levels = [int(x) for x in sys.argv[1:]] or [1, 2, 4, 8, 16]
+    n_cpus = len(os.sched_getaffinity(0))
     out, steal = {}, {}
     for n in levels:
+        if n > n_cpus:
+            print(f"warning: {n} procs > {n_cpus} cpus in the affinity mask; "
+                  f"clamping to {n_cpus}", file=sys.stderr)
+            n = n_cpus
+        if n in out:
+            continue
         rate, ticks = run_level(n)
         out[n], steal[n] = round(rate, 1), ticks
         print(f"{n:>3} procs: {out[n]:>8.1f} GB/s aggregate  "

@@ -101,10 +101,8 @@ def run_level(cpus: int, n_docs: int) -> dict:
     if out.returncode != 0:
         # a crashed bench must abort the attempt loudly, never fall
         # through to a possibly-present file (ADVICE r6 medium)
-        raise RuntimeError(
-            f"bench.py exited {out.returncode} at local[{cpus}]: "
-            f"{out.stderr.strip().splitlines()[-3:] if out.stderr else '(no stderr)'}"
-        )
+        tail = "\n".join(out.stderr.strip().splitlines()[-3:]) if out.stderr else "(no stderr)"
+        raise RuntimeError(f"bench.py exited {out.returncode} at local[{cpus}]:\n{tail}")
     try:
         with open(detail_path) as f:
             return json.load(f)["crawl_best"]
