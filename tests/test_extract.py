@@ -1,6 +1,7 @@
 """Link/field extraction semantics: the 3 selector families, depth deltas,
 urljoin, offset ordering, media exclusion — the engine's link path
-checked against the serial oracle's — and field extraction."""
+(``link_rows``) checked against the serial oracle's in both modes — and
+field extraction."""
 
 from __future__ import annotations
 
@@ -61,43 +62,83 @@ NO_LINKS_DOC = {
 }
 
 
-def test_link_rows_matches_oracle(spark):
-    """``link_rows`` (the link path run_round executes) must emit exactly
-    the reference's per-document extraction — ``oracle_links``, then
-    normalize (parity) or canonicalize (production) — in both modes, with
-    and without paths: url, host, depth, pos, and no media span."""
+def _fetched(spark, docs):
+    """The fetched rows run_round hands to ``link_rows``: (seq, depth, url,
+    spans), every parent at depth 2, seq 10, 20, ... in ``docs`` order."""
     import pandas as pd
 
-    docs = [DOC, ODD_DOC, NO_LINKS_DOC]
-    seq_of = {d["doc_id"]: 10 * (i + 1) for i, d in enumerate(docs)}
-    # the fetched rows run_round hands over: (seq, depth, url, spans)
     schema = T.StructType([T.StructField("seq", T.LongType()), *CORPUS_SPARK_SCHEMA.fields])
-    pdf = pd.DataFrame([{"seq": seq_of[d["doc_id"]], **d} for d in docs])
-    fetched = spark.createDataFrame(pdf, schema=schema).select(
+    pdf = pd.DataFrame([{"seq": 10 * (i + 1), **d} for i, d in enumerate(docs)])
+    return spark.createDataFrame(pdf, schema=schema).select(
         "seq", F.lit(2).alias("depth"), F.col("doc_id").alias("url"), "spans"
     )
-    # reference golden case: offset order, three families, media skipped
+
+
+def _oracle_rows(docs, parity):
+    """The reference's per-document extraction (``oracle_links``) then
+    normalize (parity) or canonicalize (production), shaped like
+    ``link_rows``: (parent_seq, depth, pos, url, host, path)."""
+    canon = normalize_url_py if parity else canonicalize_url_py
+    want = []
+    for i, d in enumerate(docs):
+        for absu, delta, pos in oracle_links(d["doc_id"], d["spans"]):
+            s = urlsplit(absu)
+            host = s.netloc if parity else s.netloc.lower()
+            want.append((10 * (i + 1), 2 + delta, pos, canon(absu), host, s.path or "/"))
+    return want
+
+
+def _check_link_rows(spark, docs, parity):
+    """``link_rows`` (the link path run_round executes) must emit exactly
+    ``_oracle_rows`` — with and without the path column."""
+    fetched = _fetched(spark, docs)
+    want = _oracle_rows(docs, parity)
+    for need_path in (True, False):
+        rows = link_rows(fetched, parity, need_path).collect()
+        got = sorted(tuple(r) for r in rows)
+        expect = sorted(w if need_path else w[:5] for w in want)
+        assert got == expect, (parity, need_path)
+        cols = ["parent_seq", "depth", "pos", "url", "host"] + (["path"] if need_path else [])
+        assert rows[0].__fields__ == cols
+    return want
+
+
+def test_three_families_and_depth_deltas(spark):
+    # reference golden case: offset order link_next(10) pos0, link_book(30)
+    # pos1, link_cat(40) pos2; media span NOT emitted (reference never
+    # fetches images)
     assert oracle_links(DOC["doc_id"], DOC["spans"]) == [
         ("http://h.example.test/page/2", 0, 0),  # pagination: same depth (remote_worker.py:236)
         ("http://h.example.test/page/2?b=2&a=1#f", 1, 1),  # book: depth+1 (:220), urljoin'd
         ("http://h.example.test/cat/3", 0, 2),  # category: same depth (:252)
     ]
-    for parity in (True, False):
-        canon = normalize_url_py if parity else canonicalize_url_py
-        want = []
-        for d in docs:
-            for absu, delta, pos in oracle_links(d["doc_id"], d["spans"]):
-                s = urlsplit(absu)
-                host = s.netloc if parity else s.netloc.lower()
-                want.append((seq_of[d["doc_id"]], 2 + delta, pos, canon(absu), host, s.path or "/"))
-        assert len(want) == 7  # 3 + 4 links; media and text spans never emitted
-        for need_path in (True, False):
-            rows = link_rows(fetched, parity, need_path).collect()
-            got = sorted(tuple(r) for r in rows)
-            expect = sorted(w if need_path else w[:5] for w in want)
-            assert got == expect, (parity, need_path)
-            cols = ["parent_seq", "depth", "pos", "url", "host"] + (["path"] if need_path else [])
-            assert rows[0].__fields__ == cols
+    rows = link_rows(_fetched(spark, [DOC]), True, True).orderBy("pos").collect()
+    assert [(r["depth"], r["pos"], r["url"]) for r in rows] == [
+        (2, 0, normalize_url_py("http://h.example.test/page/2")),
+        (3, 1, normalize_url_py("http://h.example.test/page/2?b=2&a=1#f")),
+        (2, 2, normalize_url_py("http://h.example.test/cat/3")),
+    ]
+    assert all(r["parent_seq"] == 10 and r["host"] == "h.example.test" for r in rows)
+    assert rows[2]["path"] == "/cat/3"
+
+
+def test_fused_equals_unfused_plus_normalize(spark):
+    """Parity mode: the engine's fused extract+canonicalize link path
+    equals the reference's unfused extraction plus ``normalize_url_py`` —
+    url, host, path, depth and pos — on the golden doc, an adversarial doc
+    and a doc with no links."""
+    want = _check_link_rows(spark, [DOC, ODD_DOC, NO_LINKS_DOC], parity=True)
+    assert len(want) == 7  # 3 + 4 links; media and text spans never emitted
+
+
+def test_flat_link_path_equals_fused(spark):
+    """Production mode: the same link path with ``canonicalize_url_py``
+    (lower-cased host, default port dropped, sorted query) equals the
+    reference's extraction plus canonicalization, with and without the
+    path column."""
+    want = _check_link_rows(spark, [DOC, ODD_DOC, NO_LINKS_DOC], parity=False)
+    assert len(want) == 7
+    assert "http://h.example.test/Cat/4?a=2&z=1" in {w[3] for w in want}
 
 
 def test_field_extraction_first_match_and_strip(spark):
