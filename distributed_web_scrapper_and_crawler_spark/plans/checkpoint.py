@@ -8,15 +8,22 @@ versioned Parquet directories:
 - ``pending`` is written as a **full snapshot** each checkpointed round
   (it is the active set — the analog of Iceberg copy-on-write on the
   hot partition);
-- ``done`` / ``seen`` / ``enqueued`` / ``pages`` / ``metrics`` are
-  written as **append deltas** (the analog of Iceberg appends — no
-  rewrite of the ever-growing mass);
+- ``done`` / ``pages`` / ``metrics`` are written as **append deltas**
+  (the analog of Iceberg appends — no rewrite of the ever-growing mass);
+- ``enqueued`` and ``seen`` are **not stored**: ``load_state`` derives
+  them from the stored tables (``plans/state.py``): ``enqueued`` =
+  π(url, url_hash)(pending ∪ done) and ``seen`` = the completed rows of
+  ``done``. Manifests written before this rule may still list them;
+  those entries are ignored.
 - a ``_MANIFEST.json``, written LAST, is the atomic commit marker (the
   snapshot pointer): it lists, per table, the exact delta paths that
   compose the table at that round. A crash mid-write leaves no manifest
   => the round never happened (resume re-runs it deterministically).
 - every ``compact_every`` checkpoints the append chains are compacted
-  into a fresh base snapshot so read fan-in stays bounded.
+  into a fresh base snapshot so read fan-in stays bounded: the base is
+  written as ``ceil(chain bytes / COMPACT_FILE_BYTES)`` files (at least
+  one), so a compacted table holds a file count set by its size, not by
+  how many partitions its inputs were read as.
 
 On a real cluster this maps 1:1 to Iceberg ``writeTo(...).append()`` +
 ``MERGE INTO`` with idempotent ``url_hash`` merge keys; the interface
@@ -26,6 +33,7 @@ On a real cluster this maps 1:1 to Iceberg ``writeTo(...).append()`` +
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 
@@ -33,17 +41,27 @@ from pyspark.sql import DataFrame, SparkSession
 
 from distributed_web_scrapper_and_crawler_spark.plans.state import (
     DONE_SCHEMA,
-    ENQUEUED_SCHEMA,
     FRONTIER_SCHEMA,
     METRICS_SCHEMA,
-    SEEN_SCHEMA,
     CrawlState,
+    derive_enqueued,
+    derive_seen,
     pages_schema,
 )
 
 SNAPSHOT_TABLES = ("pending",)
-APPEND_TABLES = ("done", "seen", "enqueued", "pages", "metrics")
+APPEND_TABLES = ("done", "pages", "metrics")
 ALL_TABLES = SNAPSHOT_TABLES + APPEND_TABLES
+# target on-disk size of one compacted file (Spark's default scan split)
+COMPACT_FILE_BYTES = 128 << 20
+
+
+def _dir_bytes(paths: list[str]) -> int:
+    total = 0
+    for p in paths:
+        for root, _, files in os.walk(p):
+            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    return total
 
 
 class CheckpointStore:
@@ -104,9 +122,10 @@ class CheckpointStore:
     def write_round(self, state: CrawlState, deltas: dict[str, DataFrame]) -> None:
         """Persist one completed round.
 
-        ``deltas`` holds this round's *new* rows for append tables;
-        ``state.pending`` is snapshotted in full. The manifest commits
-        the round atomically (written last).
+        ``deltas`` holds this round's *new* rows for append tables (keys
+        outside ``APPEND_TABLES`` are ignored); ``state.pending`` is
+        snapshotted in full. The manifest commits the round atomically
+        (written last).
         """
         rnd = state.round
         rdir = self._round_dir(rnd)
@@ -131,10 +150,15 @@ class CheckpointStore:
             dpath = os.path.join(rdir, name)
             prior_paths = prev_manifest["tables"].get(name, []) if prev_manifest else []
             if len(prior_paths) >= self.compact_every:
-                # fold the whole chain into one base snapshot
+                # fold the whole chain into one base snapshot of n_files
+                # files. A shuffle, not a plain coalesce: coalesce would run
+                # this round's delta plan (the pages extraction UDF) inside
+                # the n_files tasks too. Hashing on every column keeps the
+                # exchange deterministic without a sort.
                 base = self._read(None, prior_paths) if self.storage_format == "delta" else self.spark.read.parquet(*prior_paths)
                 combined = base.unionByName(deltas[name]) if name in deltas else base
-                self._write(combined, dpath)
+                n_files = max(1, math.ceil(_dir_bytes(prior_paths) / COMPACT_FILE_BYTES))
+                self._write(combined.repartition(n_files, *combined.columns), dpath)
                 manifest["tables"][name] = [dpath]
             else:
                 paths = list(prior_paths)
@@ -151,8 +175,8 @@ class CheckpointStore:
         """Persist the COMPLETE state as base snapshots (no delta chains).
 
         Needed by lifecycle mutations that SHRINK append-only tables —
-        ``readmit_cancelled`` removes rows from ``enqueued`` and ``done``,
-        which no append delta can express. The Iceberg analog is a
+        ``readmit_cancelled`` removes rows from ``done``, which no append
+        delta can express. The Iceberg analog is a
         copy-on-write MERGE snapshot instead of an append snapshot.
         """
         rnd = state.round
@@ -187,8 +211,6 @@ class CheckpointStore:
         schemas = {
             "pending": FRONTIER_SCHEMA,
             "done": DONE_SCHEMA,
-            "seen": SEEN_SCHEMA,
-            "enqueued": ENQUEUED_SCHEMA,
             "pages": pages_schema(field_names),
             "metrics": METRICS_SCHEMA,
         }
@@ -199,11 +221,12 @@ class CheckpointStore:
                 return self.spark.createDataFrame([], schemas[name])
             return self._read(schemas[name], paths)
 
+        pending, done = rd("pending"), rd("done")
         return CrawlState(
-            pending=rd("pending"),
-            done=rd("done"),
-            seen=rd("seen"),
-            enqueued=rd("enqueued"),
+            pending=pending,
+            done=done,
+            seen=derive_seen(done),
+            enqueued=derive_enqueued(pending, done),
             pages=rd("pages"),
             metrics=rd("metrics"),
             max_seq=m["max_seq"],

@@ -23,7 +23,10 @@ from distributed_web_scrapper_and_crawler_spark.operators.bloom import (
     NumpyBloom,
     add_df_to_filter,
 )
-from distributed_web_scrapper_and_crawler_spark.plans.checkpoint import CheckpointStore
+from distributed_web_scrapper_and_crawler_spark.plans.checkpoint import (
+    APPEND_TABLES,
+    CheckpointStore,
+)
 from distributed_web_scrapper_and_crawler_spark.plans.round import run_round
 from distributed_web_scrapper_and_crawler_spark.plans.seq import assign_global_seq
 from distributed_web_scrapper_and_crawler_spark.plans.state import CrawlState, empty_state
@@ -44,7 +47,7 @@ class CrawlEngine:
     _retained_caches: list = field(default_factory=list)
     # deltas of rounds completed since the last durable commit
     # (checkpoint_every > 1): unioned into the next write_round so no
-    # round's done/seen/pages/enqueued rows are ever dropped from the store
+    # round's done/pages/metrics rows are ever dropped from the store
     _buffered_deltas: dict = field(default_factory=dict)
 
     @staticmethod
@@ -152,8 +155,9 @@ class CrawlEngine:
             # commit the seeded state as round -1: the seeds' enqueued-set
             # membership must survive a restart or they would be re-crawled
             # when a page links back to a seed (the "any status" queue
-            # check, server.py:440-443)
-            self.store.write_round(state, {"enqueued": state.enqueued})
+            # check, server.py:440-443). The pending snapshot carries it:
+            # the store derives enqueued from pending ∪ done.
+            self.store.write_round(state, {})
         self.state = state
         return state
 
@@ -201,8 +205,9 @@ class CrawlEngine:
             )
             # durably commit: stream-enqueued seeds must keep their enqueued
             # membership across a restart or a later link to them would be
-            # re-crawled (exactly-once contract, streaming/rounds_stream.py)
-            self._commit_lifecycle(append_deltas={"enqueued": rows.select("url", "url_hash")})
+            # re-crawled (exactly-once contract, streaming/rounds_stream.py);
+            # the pending snapshot carries it
+            self._commit_lifecycle()
         return n
 
     def cancel(self) -> int:
@@ -222,10 +227,11 @@ class CrawlEngine:
 
     def _commit_lifecycle(self, append_deltas: dict | None = None, snapshot: bool = False) -> None:
         """Persist a lifecycle mutation when a store is attached; no-op
-        otherwise. Append-expressible mutations (enqueue_seeds, cancel)
-        commit as a normal round delta; shrinking mutations (readmit)
-        need a full snapshot. Buffered rounds are flushed first so the
-        prior manifest is current."""
+        otherwise. Append-expressible mutations commit as a normal round:
+        cancel appends its ``done`` rows, enqueue_seeds changes only
+        ``pending`` (snapshotted every round); shrinking mutations
+        (readmit) need a full snapshot. Buffered rounds are flushed first
+        so the prior manifest is current."""
         if self.store is None:
             return
         if snapshot:
@@ -403,7 +409,7 @@ class CrawlEngine:
                 # a store is attached but this round isn't durable
                 # (checkpoint_every > 1): buffer its deltas for the next
                 # write_round so the store never silently loses rounds
-                for k in ("done", "seen", "enqueued", "pages", "metrics"):
+                for k in APPEND_TABLES:
                     prev_buf = self._buffered_deltas.get(k)
                     self._buffered_deltas[k] = (
                         prev_buf.unionByName(d[k]) if prev_buf is not None else d[k]

@@ -51,7 +51,11 @@ from distributed_web_scrapper_and_crawler_spark.operators.extract import (
 )
 from distributed_web_scrapper_and_crawler_spark.plans.politeness import apply_robots, claim_batch
 from distributed_web_scrapper_and_crawler_spark.plans.seq import assign_global_seq
-from distributed_web_scrapper_and_crawler_spark.plans.state import METRICS_SCHEMA, CrawlState
+from distributed_web_scrapper_and_crawler_spark.plans.state import (
+    METRICS_SCHEMA,
+    CrawlState,
+    local_table,
+)
 
 FRONTIER_COLS = ["url", "url_hash", "host", "depth", "discovered_round", "seq", "added_by"]
 
@@ -283,7 +287,7 @@ def run_round(
             new_links.groupBy(F.spark_partition_id().alias("pid")).agg(F.count(F.lit(1)).alias("n")).collect()
         )
         metric_rows += [(rnd, int(r["pid"]), 0, 0, 0, int(r["n"]), 0, 0) for r in per_part]
-    metrics_delta = spark.createDataFrame(metric_rows, METRICS_SCHEMA)
+    metrics_delta = local_table(spark, metric_rows, METRICS_SCHEMA)
 
     new_state = state.evolve(
         pending=rest_pending.unionByName(pending_delta),

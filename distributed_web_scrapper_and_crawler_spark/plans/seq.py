@@ -12,6 +12,12 @@ from a tiny driver-side prefix sum over bucket counts (one extra small
 job per round; the counts DataFrame has ~|claim|/B rows). Deterministic,
 shuffle-parallel, no sampling — unlike ``repartitionByRange`` whose
 boundaries come from reservoir sampling.
+
+The offsets go back into the plan as a literal map expression
+(``create_map(lit(b0), lit(off0), ...)[_b]``), one entry per bucket: no
+driver-built relation, no join and no broadcast job. A DataFrame made
+from a Python list would be a Python RDD, unpickled by a Python worker
+every time the seq'd rows are evaluated.
 """
 
 from __future__ import annotations
@@ -34,7 +40,6 @@ def assign_global_seq(
     the count falls out of the offset computation for free, so callers
     advance their seq watermark without an extra action.
     """
-    spark = df.sparkSession
     b = df.withColumn("_b", F.floor(F.col(order_cols[0]) / F.lit(bucket_size)).cast("long"))
     counts = b.groupBy("_b").agg(F.count(F.lit(1)).alias("_n")).collect()
     offset = 0
@@ -44,11 +49,9 @@ def assign_global_seq(
         offset += row["_n"]
     if not offsets:
         return df.withColumn("seq", F.lit(None).cast("long")), 0
-    off_df = spark.createDataFrame(offsets, "_b long, _off long")
+    off = F.create_map(*[F.lit(v).cast("long") for pair in offsets for v in pair])
     w = Window.partitionBy("_b").orderBy(*[F.col(c) for c in order_cols])
-    out = (
-        b.join(F.broadcast(off_df), "_b")
-        .withColumn("seq", F.lit(start) + F.col("_off") + F.row_number().over(w) - 1)
-        .drop("_b", "_off")
-    )
+    out = b.withColumn(
+        "seq", F.lit(start) + off[F.col("_b")] + F.row_number().over(w) - 1
+    ).drop("_b")
     return out, offset

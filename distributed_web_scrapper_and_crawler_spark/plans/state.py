@@ -7,16 +7,30 @@ state table        reference collection          notes
                                                  per round (active set)
 ``done``           ``url_queue`` other statuses  append-only
                                                  (completed/failed/cancelled)
-``seen``           ``visited_urls``              append-only, normalized URLs
+``seen``           ``visited_urls``              normalized URLs fetched, with
+                                                 their round
 ``enqueued``       unique index on url_queue     membership keys (url_hash,url)
                                                  = pending ∪ claimed ∪ done;
-                                                 append-only, drives the
-                                                 "already queued with ANY
-                                                 status" check server.py:440-443
+                                                 drives the "already queued
+                                                 with ANY status" check
+                                                 server.py:440-443
 ``pages``          ``pages``                     extraction fields + ordered
                                                  span sequence
 ``metrics``        worker registry (observability) per-round / per-partition
 =================  ============================  ===============================
+
+Two of the six tables are functions of the others, and every state
+transition (seeding, ``run_round``, ``cancel``, ``readmit_cancelled``,
+``enqueue_seeds``) keeps them so:
+
+- ``enqueued`` = π(url, url_hash)(``pending`` ∪ ``done``) — a URL is
+  queued with some status iff it is pending or done (``derive_enqueued``);
+- ``seen`` = the ``status = 'completed'`` rows of ``done``, with
+  ``completed_round`` as ``round`` (``derive_seen``).
+
+The in-memory engine keeps all six tables (``run_round`` appends to
+``seen``/``enqueued`` directly); the checkpoint store persists only the
+other four and rebuilds these two with the functions below on load.
 
 Schemas are fixed ``StructType``s (FIXTURES.md §5) — a strict improvement
 over the reference's code-defined implicit Mongo schemas (SURVEY.md §1.3).
@@ -27,6 +41,7 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_web_scrapper_and_crawler_spark.sources.corpus import SPANS_SPARK_SCHEMA
@@ -111,6 +126,35 @@ class CrawlState:
 
     def evolve(self, **kw) -> "CrawlState":
         return replace(self, **kw)
+
+
+def local_table(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A DataFrame of a few driver-side rows, planned as a JVM
+    ``LocalTableScan``: the rows cross to the JVM once as an Arrow table,
+    where ``createDataFrame(list)`` would make a Python RDD that a Python
+    worker unpickles on every evaluation. ``None`` stays NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def derive_enqueued(pending: DataFrame, done: DataFrame) -> DataFrame:
+    """The ``enqueued`` key set: every pending or done URL (a union, not a
+    distinct — the two tables are disjoint and each is duplicate-free)."""
+    return pending.select("url", "url_hash").unionByName(done.select("url", "url_hash"))
+
+
+def derive_seen(done: DataFrame) -> DataFrame:
+    """The ``seen`` table: completed rows of ``done``, keyed by the round
+    that fetched them."""
+    return done.filter(F.col("status") == "completed").select(
+        "url", "url_hash", F.col("completed_round").alias("round")
+    )
 
 
 def empty_state(spark: SparkSession, field_names: list[str]) -> CrawlState:

@@ -4,14 +4,45 @@ contract)."""
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import shutil
+from collections import Counter
 
 from distributed_web_scrapper_and_crawler_spark.config import CrawlConfig
 from distributed_web_scrapper_and_crawler_spark.plans.crawl import CrawlEngine
 
 
 from tests.conftest import collect_engine_state as _collect_state
+
+# the columns each state table is compared on (pages: its keys; metrics:
+# everything but the wall clock)
+_TABLE_COLS = {
+    "pending": ("url", "url_hash", "host", "depth", "discovered_round", "seq", "added_by"),
+    "done": ("url", "url_hash", "seq", "status", "completed_round"),
+    "seen": ("url", "url_hash", "round"),
+    "enqueued": ("url", "url_hash"),
+    "pages": ("url", "depth", "round"),
+    "metrics": ("round", "partition_id", "urls_claimed", "urls_fetched", "links_found", "links_new", "dedup_hits"),
+}
+
+
+def _tables(state) -> dict:
+    """Every state table as a multiset of rows over ``_TABLE_COLS``."""
+    return {
+        name: Counter(tuple(r) for r in getattr(state, name).select(*cols).collect())
+        for name, cols in _TABLE_COLS.items()
+    }
+
+
+def _manifest_tables(ckpt: str) -> set:
+    """The distinct sorted table-name lists of every manifest in the store."""
+    out = set()
+    for d in os.listdir(ckpt):
+        with open(os.path.join(ckpt, d, "_MANIFEST.json")) as f:
+            out.add(tuple(sorted(json.load(f)["tables"])))
+    return out
 
 
 def test_kill_resume_equals_uninterrupted(spark, tiny_corpus, tiny_seeds, tmp_path, tiny_uninterrupted):
@@ -102,15 +133,33 @@ def test_lifecycle_mutations_survive_restart(spark, tiny_corpus, tiny_seeds, tmp
     enq_live = eng2.state.enqueued.count()
     del eng2
 
+    # the same lifecycle on an engine without a store, whose seen and
+    # enqueued tables are maintained by every transition, not derived
+    twin = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg)
+    twin.seed(tiny_seeds)
+    twin.run(max_rounds=2)
+    twin.cancel()
+    twin.readmit_cancelled()
+    twin.enqueue_seeds(sorted(live_cancelled))
+
     eng3 = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
     eng3.resume()
     assert eng3.state.done.filter("status = 'cancelled'").count() == 0  # readmit survived
     assert eng3.state.enqueued.count() == enq_live  # enqueue_seeds survived
     assert eng3.state.pending_count == len(live_cancelled)
+    assert _tables(eng3.state) == _tables(twin.state)
     eng3.run()
+    twin.run()
     seen = {r["url"] for r in eng3.state.seen.collect()}
     in_corpus = {r["doc_id"] for r in tiny_corpus.select("doc_id").collect()}
     assert {u for u in live_cancelled if u in in_corpus} <= seen
+
+    # the store holds pending, done, pages and metrics only; resume derives
+    # enqueued and seen equal to the maintained tables, as multisets
+    assert _manifest_tables(ckpt) == {("done", "metrics", "pages", "pending")}
+    eng4 = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
+    eng4.resume()
+    assert _tables(eng4.state) == _tables(twin.state)
 
 
 def test_compaction_preserves_state(spark, tiny_corpus, tiny_seeds, tmp_path):
@@ -126,6 +175,80 @@ def test_compaction_preserves_state(spark, tiny_corpus, tiny_seeds, tmp_path):
     b = sorted(r["url"] for r in eng2.state.enqueued.collect())
     assert a == b
     assert eng2.state.round == eng.state.round
+
+
+def test_compaction_bounds_file_count(spark, tiny_corpus, tiny_seeds, tmp_path):
+    """A compacted table holds ceil(chain bytes / COMPACT_FILE_BYTES) files
+    (at least one), however many partitions its inputs were read as; two
+    compaction cycles leave the resumed state equal to an engine without a
+    store."""
+    from distributed_web_scrapper_and_crawler_spark.plans.checkpoint import (
+        APPEND_TABLES,
+        COMPACT_FILE_BYTES,
+        _dir_bytes,
+    )
+
+    cfg = CrawlConfig(parity_mode=True, round_budget=2)
+    ckpt = str(tmp_path / "ckpt")
+    eng = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
+    eng.store.compact_every = 2
+    eng.seed(tiny_seeds)
+    eng.run(max_rounds=5)  # rounds 0-4: chains compact at rounds 2 and 4
+    assert eng.state.round == 4
+
+    store = eng.store
+    compacted = {name: 0 for name in APPEND_TABLES}
+    for rnd in store.list_rounds()[1:]:
+        prior = store._read_manifest(rnd - 1)["tables"]
+        for name in APPEND_TABLES:
+            if len(prior[name]) < store.compact_every:
+                continue
+            compacted[name] += 1
+            want = max(1, math.ceil(_dir_bytes(prior[name]) / COMPACT_FILE_BYTES))
+            (path,) = store._read_manifest(rnd)["tables"][name]
+            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            assert len(files) == want, (rnd, name, files)
+    assert compacted == {name: 2 for name in APPEND_TABLES}
+
+    # a manifest from a store that still persisted seen and enqueued loads
+    # the same: those entries are ignored
+    mpath = store._manifest_path(4)
+    with open(mpath) as f:
+        m = json.load(f)
+    m["tables"].update(seen=[os.path.join(ckpt, "gone")], enqueued=[os.path.join(ckpt, "gone")])
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+
+    twin = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg)
+    twin.seed(tiny_seeds)
+    twin.run(max_rounds=5)
+    eng2 = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
+    eng2.resume()
+    assert eng2.state.round == 4
+    assert _tables(eng2.state) == _tables(twin.state)
+
+
+def test_uncollected_stats_stay_null(spark, tiny_corpus, tiny_seeds, tmp_path):
+    """With stats collection off, the metrics table holds NULL — never the
+    -1 sentinel of round_stats — for the uncollected counts, live and after
+    resume."""
+    cfg = CrawlConfig(
+        parity_mode=True, round_budget=32, collect_stats=False, collect_fetch_stats=False
+    )
+    ckpt = str(tmp_path / "ckpt")
+    eng = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
+    eng.seed(tiny_seeds)
+    eng.run(max_rounds=2)
+    assert eng.round_stats[-1]["links_found"] == -1
+    eng2 = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
+    eng2.resume()
+    cols = ("urls_fetched", "links_found", "dedup_hits")
+    for state in (eng.state, eng2.state):
+        rows = state.metrics.select("round", "urls_claimed", *cols).collect()
+        assert sorted(r["round"] for r in rows) == [0, 1]
+        for r in rows:
+            assert r["urls_claimed"] > 0
+            assert all(r[c] is None for c in cols), r
 
 
 def test_table_format_probe(spark, tmp_path):

@@ -6,8 +6,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from distributed_web_scrapper_and_crawler_spark.plans.seq import assign_global_seq
+from distributed_web_scrapper_and_crawler_spark.plans.state import local_table
 
 
 @pytest.mark.parametrize("bucket_size", [1, 3, 4096])
@@ -18,9 +20,14 @@ def test_matches_global_rank(spark, bucket_size):
     rows = [(rng.randrange(0, 50), rng.randrange(0, 20), f"u{i}") for i in range(500)]
     # make order keys unique like real (parent_seq, pos) pairs
     rows = [(ps, i % 37, u) for i, (ps, _, u) in enumerate(rows)]
-    df = spark.createDataFrame(rows, "parent_seq long, pos int, url string").repartition(8)
+    # a JVM local relation, so any Python RDD in the plan below is seq's own
+    df = local_table(spark, rows, T.StructType.fromDDL("parent_seq long, pos int, url string"))
+    df = df.repartition(8)
     got, n = assign_global_seq(df, start=100, bucket_size=bucket_size)
     assert n == 500
+    # the bucket offsets are a literal map: no offsets relation, no join
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "ExistingRDD" not in plan, plan
     naive = df.withColumn(
         "want", F.row_number().over(Window.orderBy("parent_seq", "pos")) + 99
     )
@@ -64,6 +71,23 @@ def test_per_partition_lineage_metrics(spark, tiny_corpus, tiny_seeds):
     }
     for rnd, s in per_round_sum.items():
         assert s == agg[rnd]
+
+
+def test_metrics_delta_is_local_table_scan(spark, tiny_corpus, tiny_seeds):
+    """The round's one-row metrics delta is a JVM local relation, not a
+    Python RDD that a Python worker unpickles on every write."""
+    from distributed_web_scrapper_and_crawler_spark.config import CrawlConfig
+    from distributed_web_scrapper_and_crawler_spark.plans.crawl import CrawlEngine
+    from distributed_web_scrapper_and_crawler_spark.plans.round import run_round
+
+    cfg = CrawlConfig(parity_mode=True, round_budget=32)
+    eng = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg)
+    eng.seed(tiny_seeds)
+    res = run_round(spark, eng.state, tiny_corpus, cfg, bloom=eng.bloom)
+    for c in res.caches:
+        eng._release(c)
+    plan = res.deltas["metrics"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), plan
 
 
 def test_register_views_sql_surface(spark, tiny_corpus, tiny_seeds):
