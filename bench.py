@@ -18,16 +18,15 @@ Interference accounting (VERDICT r4 #1): this VM takes bursty co-tenant
 CPU steal (multi-minute storms of 150-300 ticks/15 s vs quiet spells of
 < 20 — see BENCH.md). Every section of the JSON line therefore carries
 the /proc/stat steal ticks consumed DURING it, the crawl section is
-best-of-N with each attempt gated on a bounded quiet-window wait (the
-same protocol tools/scaling_evidence.py uses), and ALL crawl attempts
-are reported so the steal correlation is visible in the artifact itself.
+best-of-N with each attempt gated on a bounded quiet-window wait, and ALL
+crawl attempts are reported so the steal correlation is visible in the
+artifact itself.
 
 The crawl section measures the north-rule metric (URLs scheduled+deduped
 per second) on the real engine: production-mode rounds (per-host window
 budgets, Bloom-prefiltered dedup) over a deterministic synthetic web.
-Scaling evidence (local[2] vs local[8], the single protocol in BASELINE.md) is produced by
-tools/scaling_evidence.py, which shells out to this file at two
-parallelism levels on the SAME cached corpus.
+Per-layer numbers (phase spans, jobs per round, UDF time) come from
+``perfbench/run.py --trace 1``, not from this file.
 """
 
 from __future__ import annotations
@@ -56,8 +55,7 @@ def _steal_delta(s0: int, s1: int) -> int | None:
 
 def wait_for_quiet(max_wait_s: int, threshold: int = 60, window_s: int = 15) -> dict:
     """Block until a window_s sample shows < threshold steal ticks, or the
-    bounded wait budget runs out (identical gate to
-    tools/scaling_evidence.py). Returns what happened so the artifact
+    bounded wait budget runs out. Returns what happened so the artifact
     records whether the following run started quiet or gave up mid-storm."""
     t0 = time.monotonic()
     last = -1
@@ -161,9 +159,9 @@ def bench_crawl(spark, n_docs: int, rounds: int = 4, seed_frac: float = 0.3) -> 
     corpus, spec = _bench_corpus(spark, n_docs)
     # parquet splits would cache the corpus as ~5 fat partitions, capping
     # the fetch-join + extraction stages at 5 tasks; repartition once on
-    # the JOIN KEY (fixed count — identical across scaling levels) so the
-    # copartitioned fetch join reads the cache in place and only the claim
-    # side shuffles each round
+    # the JOIN KEY (fixed count, whatever local[N]) so the copartitioned
+    # fetch join reads the cache in place and only the claim side
+    # shuffles each round
     corpus = corpus.repartition(64, "doc_id").cache()
     corpus.count()
     # AQE's per-job re-optimization is measurable serial driver time on
@@ -173,16 +171,12 @@ def bench_crawl(spark, n_docs: int, rounds: int = 4, seed_frac: float = 0.3) -> 
     cfg = CrawlConfig(
         parity_mode=False,
         per_host_budget=1 << 17,  # politeness window enforced, batches stay fat
-        use_bloom=True,
         allowed_domains=("example.test",),
         lazy_output_tables=True,
         # claim-side-only shuffle into the corpus's cached partitioning:
         # kills the per-round driver-side broadcast collect+build (serial
-        # at every parallelism level — scaling-efficiency tax)
+        # at every parallelism level)
         fetch_join="copartition",
-        # the per-round fetched-row count job is serial overhead the north
-        # metric doesn't need (links_found still collected)
-        collect_fetch_stats=False,
         # hot-host salting (north-rule skew handling): host 0 carries 30%
         # of the frontier; unsalted, its claim window sorts on ONE core
         # and flat-lines the scaling ratio (PLANS.md ledger)
@@ -210,8 +204,7 @@ def bench_crawl(spark, n_docs: int, rounds: int = 4, seed_frac: float = 0.3) -> 
     links = sum(s["links_found"] for s in eng.round_stats)
     new = sum(s["links_new"] for s in eng.round_stats)
     # per-phase totals across rounds (claim / links / dedup_seq / bloom_add /
-    # fetched_count / materialize) — the scaling harness records these per
-    # level so a sub-0.8 efficiency can be attributed to its serial term
+    # materialize), so a slow run can be attributed to its phase
     phases: dict[str, float] = {}
     for s in eng.round_stats:
         for k, v in s.get("phases", {}).items():
@@ -259,8 +252,8 @@ def main() -> None:
 
     from distributed_web_scrapper_and_crawler_spark.session import get_spark
 
-    # shuffle_partitions FIXED across parallelism levels — the scaling
-    # comparison must differ only in local[N] (BASELINE.md protocol)
+    # shuffle_partitions FIXED whatever local[N], so runs at different
+    # SPARK_GRAFT_CPUS differ only in parallelism
     spark = get_spark(app_name="dwsc-bench", master=f"local[{cpus}]", shuffle_partitions=32)
 
     steal_start = _steal_ticks()
@@ -293,10 +286,7 @@ def main() -> None:
         sf_val = sf
     steal_total = _steal_delta(steal_start, _steal_ticks())
     bench_wall = round(time.monotonic() - t_start, 1)
-    detail_path = os.environ.get(
-        "SPARK_GRAFT_DETAIL_PATH",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL_last.json"),
-    )
+    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL_last.json")
     result, detail = compose_artifacts(
         queries, queries_steal, crawl, crawl_attempts,
         cpus=cpus, sf_val=sf_val, steal_total=steal_total,

@@ -6,7 +6,7 @@ crawler params (``allowed_domains``, ``max_depth``, ``rate_limit``,
 surface is a frozen dataclass built on the driver and captured by the
 (broadcast-serialized) Arrow UDF closures.
 
-Two extra flags control reference-parity vs production behavior:
+One flag, ``parity_mode``, chooses reference-parity vs production behavior:
 
 - ``parity_mode``: reference-exact semantics — path-B URL normalization
   (drop query+fragment, keep case, ``distributed_crawler.py:75-78``), NO
@@ -16,6 +16,11 @@ Two extra flags control reference-parity vs production behavior:
 - production mode: full canonicalization (lowercase scheme/host, sorted
   query params, fragment strip), per-host politeness budgets, robots
   rules, depth cap — the north-rule capabilities the reference lacks.
+
+Each engine-behavior field (``parity_mode`` onwards) is set by some
+caller — a test, ``bench.py`` or ``perfbench`` — for a reason it measures
+or checks. The per-round ``metrics`` stats are not optional: ``run_round``
+collects them in the same action as the links count.
 """
 
 from __future__ import annotations
@@ -41,6 +46,9 @@ DEFAULT_EXTRACTION_RULES: tuple[ExtractionRule, ...] = tuple(
     ExtractionRule(field=f, marker=f)
     for f in ("title", "price", "rating", "availability", "category", "description")
 )
+
+
+SEEN_FILTERS = ("bloom", "sharded", "cuckoo", "none")
 
 
 @dataclass(frozen=True)
@@ -74,24 +82,15 @@ class CrawlConfig:
     # hot host's rank doesn't funnel through one task (north-rule skew
     # handling). Trades strict per-host FIFO for per-(host,salt) FIFO.
     salt_hot_hosts: int = 0
-    # Pre-filter in front of the ground-truth anti-joins.
-    use_bloom: bool = True
-    bloom_fpp: float = 0.01
-    # 'bloom' (default: one flat filter, mergeable partials),
-    # 'sharded' (bits split by pmod(url_hash, bloom_shards) — the 10^10
-    # path: no single broadcast/merge exceeds one shard's bits), or
-    # 'cuckoo' (supports DELETE => cancelled-URL re-admission without a
-    # rebuild; degrades to always-maybe after overflow/delete).
+    # Pre-filter in front of the ground-truth anti-join: 'bloom' (default:
+    # one flat filter, mergeable partials), 'sharded' (bits split by
+    # pmod(url_hash, bloom_shards) — the 10^10 path: no single
+    # broadcast/merge exceeds one shard's bits), 'cuckoo' (supports DELETE
+    # => cancelled-URL re-admission without a rebuild; degrades to
+    # always-maybe after overflow/delete), or 'none' (every link pays the
+    # anti-join).
     seen_filter: str = "bloom"
     bloom_shards: int = 16
-    # Collect per-round link/fetch counts for the metrics table. Costs two
-    # extra Spark jobs per round; benchmarks turn it off (claim count and
-    # new-link count are structural — always collected).
-    collect_stats: bool = True
-    # The per-round fetched-row count is its own (cheap but serial) Spark
-    # job; benchmarks turn it off independently of collect_stats because
-    # the north metric needs links_found but not urls_fetched.
-    collect_fetch_stats: bool = True
     # Fetch-join strategy: "broadcast" ships the (budget-bounded) claim
     # batch to every corpus partition so the corpus side never shuffles.
     # "copartition" shuffles ONLY the claim side into the corpus's existing
@@ -101,11 +100,11 @@ class CrawlConfig:
     # identical at every cluster size), and no bound on claim size. The
     # bucket-join analog for an Iceberg corpus.
     fetch_join: str = "broadcast"
-    # Keep the write-only output tables (done/seen/pages/metrics) as lazy
+    # Keep the write-only output tables (done/pages/metrics) as lazy
     # unions over retained round caches instead of checkpointing them every
-    # round. Each skipped checkpoint is a serial driver job; benchmarks
-    # enable this (outputs are only read at the end). Costs cache memory
-    # proportional to total fetched rows — bound crawls only.
+    # round. Each skipped checkpoint is a serial driver job; the bench.py
+    # crawl enables this (outputs are only read at the end). Costs cache
+    # memory proportional to total fetched rows — bound crawls only.
     lazy_output_tables: bool = False
 
     def __post_init__(self) -> None:
@@ -114,6 +113,12 @@ class CrawlConfig:
         if self.fetch_join not in ("broadcast", "copartition"):
             raise ValueError(
                 f"unknown fetch_join {self.fetch_join!r}: use broadcast|copartition"
+            )
+        # checked here, not where the engine builds its filter, so a typo
+        # fails at construction whichever path reads the config
+        if self.seen_filter not in SEEN_FILTERS:
+            raise ValueError(
+                f"unknown seen_filter {self.seen_filter!r}: use {'|'.join(SEEN_FILTERS)}"
             )
 
     def field_names(self) -> list[str]:

@@ -11,10 +11,10 @@ versioned Parquet directories:
 - ``done`` / ``pages`` / ``metrics`` are written as **append deltas**
   (the analog of Iceberg appends — no rewrite of the ever-growing mass);
 - ``enqueued`` and ``seen`` are **not stored**: ``load_state`` derives
-  them from the stored tables (``plans/state.py``): ``enqueued`` =
-  π(url, url_hash)(pending ∪ done) and ``seen`` = the completed rows of
-  ``done``. Manifests written before this rule may still list them;
-  those entries are ignored.
+  ``enqueued`` = π(url, url_hash)(pending ∪ done), and ``CrawlState.seen``
+  is always the completed rows of ``done`` (``plans/state.py``).
+  Manifests written before this rule may still list them; those entries
+  are ignored.
 - a ``_MANIFEST.json``, written LAST, is the atomic commit marker (the
   snapshot pointer): it lists, per table, the exact delta paths that
   compose the table at that round. A crash mid-write leaves no manifest
@@ -45,7 +45,6 @@ from distributed_web_scrapper_and_crawler_spark.plans.state import (
     METRICS_SCHEMA,
     CrawlState,
     derive_enqueued,
-    derive_seen,
     pages_schema,
 )
 
@@ -225,7 +224,6 @@ class CheckpointStore:
         return CrawlState(
             pending=pending,
             done=done,
-            seen=derive_seen(done),
             enqueued=derive_enqueued(pending, done),
             pages=rd("pages"),
             metrics=rd("metrics"),

@@ -31,6 +31,9 @@ from distributed_web_scrapper_and_crawler_spark.plans.round import run_round
 from distributed_web_scrapper_and_crawler_spark.plans.seq import assign_global_seq
 from distributed_web_scrapper_and_crawler_spark.plans.state import CrawlState, empty_state
 
+# false-positive rate the flat and sharded Bloom filters are sized for
+BLOOM_FPP = 0.01
+
 
 @dataclass
 class CrawlEngine:
@@ -76,7 +79,7 @@ class CrawlEngine:
             self.state = st.evolve(
                 **{
                     k: getattr(st, k).localCheckpoint()
-                    for k in ("pending", "done", "seen", "enqueued", "pages", "metrics")
+                    for k in ("pending", "done", "enqueued", "pages", "metrics")
                 }
             )
         if materialize and self._retained_caches and self._buffered_deltas:
@@ -94,7 +97,7 @@ class CrawlEngine:
         self.store = (
             CheckpointStore(self.spark, self.ckpt_dir) if self.ckpt_dir else None
         )
-        if self.cfg.use_bloom:
+        if self.cfg.seen_filter != "none":
             self.bloom = self._new_filter()
 
     def _new_filter(self):
@@ -108,11 +111,9 @@ class CrawlEngine:
             return ShardedBloom(
                 n_shards=self.cfg.bloom_shards,
                 expected_n=self.bloom_capacity,
-                fpp=self.cfg.bloom_fpp,
+                fpp=BLOOM_FPP,
             )
-        if self.cfg.seen_filter != "bloom":
-            raise ValueError(f"unknown seen_filter {self.cfg.seen_filter!r}: use bloom|sharded|cuckoo")
-        return NumpyBloom.sized(self.bloom_capacity, self.cfg.bloom_fpp)
+        return NumpyBloom.sized(self.bloom_capacity, BLOOM_FPP)
 
     # -- seeding (scheduler.py:62-117 / seed_urls.py:32-94) ---------------
     def seed(self, urls: list[str]) -> CrawlState:
@@ -292,7 +293,7 @@ class CrawlEngine:
         never checkpointed, never trusted across restarts)."""
         assert self.store is not None, "resume requires ckpt_dir"
         self.state = self.store.load_state(self.cfg.field_names())
-        if self.cfg.use_bloom:
+        if self.cfg.seen_filter != "none":
             self.bloom = self._new_filter()
             add_df_to_filter(self.bloom, self.state.enqueued, "url_hash")
         return self.state
@@ -354,7 +355,7 @@ class CrawlEngine:
 
         - ``pending`` is the rewritten active set => full localCheckpoint
           (or parquet snapshot on durable rounds).
-        - append-only tables (done/seen/enqueued/pages/metrics) checkpoint
+        - append-only tables (done/enqueued/pages/metrics) checkpoint
           ONLY this round's delta and lazily union it onto the previous
           (already-materialized) table — O(rows) total work across the
           crawl instead of O(rows x rounds). This is exactly the Iceberg
@@ -369,7 +370,7 @@ class CrawlEngine:
             # 30-row delta checkpointed as 32 partitions costs a task per
             # partition in every later scan, and the append chain
             # accumulates hundreds of empty tasks. The write-only tables
-            # (pages/done/seen/metrics) keep their natural partitioning —
+            # (pages/done/metrics) keep their natural partitioning —
             # coalescing those would collapse the extraction UDF into one
             # task.
             st = res.stats
@@ -384,9 +385,7 @@ class CrawlEngine:
                 return max(1, min(64, n // 25_000 + 1))
 
             prev = self.state
-            lazy_names = (
-                ("done", "seen", "pages", "metrics") if self.cfg.lazy_output_tables else ()
-            )
+            lazy_names = APPEND_TABLES if self.cfg.lazy_output_tables else ()
             todo = {
                 k: v for k, v in res.deltas.items() if k != "enqueued" and k not in lazy_names
             }
@@ -417,7 +416,6 @@ class CrawlEngine:
             self.state = res.state.evolve(
                 pending=d["pending"],
                 done=prev.done.unionByName(d["done"]),
-                seen=prev.seen.unionByName(d["seen"]),
                 enqueued=prev.enqueued.unionByName(d["enqueued"]),
                 pages=prev.pages.unionByName(d["pages"]),
                 metrics=prev.metrics.unionByName(d["metrics"]),

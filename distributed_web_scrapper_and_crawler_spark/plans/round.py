@@ -8,7 +8,7 @@ declarative plan over a whole batch::
       fetched --Arrow UDFs--> pages + exploded links
       links --canonicalize/allow/dedup--> candidates
       candidates --bloom prefilter + anti-join enqueued--> new frontier rows
-      state' = (pending - claim + new, done + claim, seen + fetched, ...)
+      state' = (pending - claim + new, done + claim, enqueued + new, ...)
 
 Every boundary that was a socket / broker hop / Mongo round-trip in the
 reference (server.py:378-414, distributed_crawler.py:282-291) is a
@@ -26,7 +26,8 @@ Scale notes (the 100 TB design points):
   the anti-join, so the exchange is reused, and hot-host skew lands on
   AQE's skew-join handling (hash keys spread hot *hosts* anyway).
 - no ``collect()`` anywhere in the data path; the only driver traffic
-  is bucket counts (tiny) and per-partition bloom bitmaps.
+  is bucket counts and the round's stats (tiny) and per-partition bloom
+  bitmaps.
 """
 
 from __future__ import annotations
@@ -160,9 +161,9 @@ def run_round(
     # is ~16x its unique set on dup-heavy rounds, so partial agg collapses
     # the shuffle volume by that factor before it hits the wire (the
     # dominant bandwidth cost of a round; PLANS.md ledger). The dup count
-    # rides along, so the links_found stat costs one tiny job over the
-    # (cached, already-unique) result instead of a count over the raw
-    # links — extraction now runs exactly once per round.
+    # rides along, so links_found is a sum over the (cached, already-
+    # unique) result instead of a count over the raw links — extraction
+    # runs exactly once per round.
     t = time.monotonic()
     unique_links = (
         links.groupBy("url_hash", "url")
@@ -181,8 +182,15 @@ def run_round(
         )
         .cache()
     )
-    n_links = unique_links.agg(F.sum("_dups")).first()[0] if cfg.collect_stats else -1
-    n_links = int(n_links) if n_links is not None else 0
+    # the round's stats in ONE action: two single-row aggregates, one over
+    # each cached input, unioned and collected together
+    counts = {
+        r["k"]: int(r["n"] or 0)
+        for r in unique_links.agg(F.lit("links").alias("k"), F.sum("_dups").alias("n"))
+        .unionByName(joined.agg(F.lit("fetched").alias("k"), F.count("_hit").alias("n")))
+        .collect()
+    }
+    n_links, n_fetched = counts["links"], counts["fetched"]
     unique_links = unique_links.drop("_dups")
     _mark("links", t)
 
@@ -191,7 +199,7 @@ def run_round(
     # filters with ZERO false negatives (Bloom/ShardedBloom always; a
     # CuckooFilter until an overflowed insert or a delete sets .degraded —
     # then every link pays the anti-join: slower, never wrong).
-    if bloom is not None and cfg.use_bloom and not getattr(bloom, "degraded", False):
+    if bloom is not None and not getattr(bloom, "degraded", False):
         from distributed_web_scrapper_and_crawler_spark.operators.bloom import (
             ShardedBloom,
             sharded_probe_maybe,
@@ -248,10 +256,9 @@ def run_round(
             .withColumn("completed_round", F.lit(rnd))
         )
     )
-    seen_delta = fetched.select("url", "url_hash", F.lit(rnd).alias("round"))
     enqueued_delta = pending_delta.select("url", "url_hash")
 
-    if bloom is not None and cfg.use_bloom and n_new and not getattr(bloom, "degraded", False):
+    if bloom is not None and n_new and not getattr(bloom, "degraded", False):
         # a degraded filter is never consulted again — skip maintaining it.
         # Fold from the CACHED pre-seq candidates: the url_hash set is
         # identical to new_links', and reading new_links here would re-run
@@ -261,27 +268,17 @@ def run_round(
         _mark("bloom_add", t)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
-    t = time.monotonic()
-    n_fetched = (
-        fetched.count() if (cfg.collect_stats and cfg.collect_fetch_stats) else -1
-    )
-    _mark("fetched_count", t)
     stats = {
         "round": rnd,
         "urls_claimed": n_claimed,
         "urls_fetched": n_fetched,
         "links_found": n_links,
         "links_new": n_new,
-        "dedup_hits": (n_links - n_new) if cfg.collect_stats else -1,
+        "dedup_hits": n_links - n_new,
         "wall_ms": wall_ms,
         "phases": phase_t,
     }
-    # uncollected stats persist as NULLs, never sentinels — a downstream
-    # sum()/avg() over the metrics table must skip them, not mis-sum -1s
-    _n_fetched = n_fetched if (cfg.collect_stats and cfg.collect_fetch_stats) else None
-    _n_links = n_links if cfg.collect_stats else None
-    _dedup = (n_links - n_new) if cfg.collect_stats else None
-    metric_rows = [(rnd, -1, n_claimed, _n_fetched, _n_links, n_new, _dedup, wall_ms)]
+    metric_rows = [(rnd, -1, n_claimed, n_fetched, n_links, n_new, n_links - n_new, wall_ms)]
     if collect_partition_metrics:
         per_part = (
             new_links.groupBy(F.spark_partition_id().alias("pid")).agg(F.count(F.lit(1)).alias("n")).collect()
@@ -292,7 +289,6 @@ def run_round(
     new_state = state.evolve(
         pending=rest_pending.unionByName(pending_delta),
         done=state.done.unionByName(done_delta),
-        seen=state.seen.unionByName(seen_delta),
         enqueued=state.enqueued.unionByName(enqueued_delta),
         pages=state.pages.unionByName(pages_delta),
         metrics=state.metrics.unionByName(metrics_delta),
@@ -302,7 +298,6 @@ def run_round(
     )
     deltas = {
         "done": done_delta,
-        "seen": seen_delta,
         "enqueued": enqueued_delta,
         "pages": pages_delta,
         "metrics": metrics_delta,

@@ -8,7 +8,7 @@ state table        reference collection          notes
 ``done``           ``url_queue`` other statuses  append-only
                                                  (completed/failed/cancelled)
 ``seen``           ``visited_urls``              normalized URLs fetched, with
-                                                 their round
+                                                 their round (derived, read-only)
 ``enqueued``       unique index on url_queue     membership keys (url_hash,url)
                                                  = pending ∪ claimed ∪ done;
                                                  drives the "already queued
@@ -19,18 +19,19 @@ state table        reference collection          notes
 ``metrics``        worker registry (observability) per-round / per-partition
 =================  ============================  ===============================
 
-Two of the six tables are functions of the others, and every state
-transition (seeding, ``run_round``, ``cancel``, ``readmit_cancelled``,
-``enqueue_seeds``) keeps them so:
+Two of the six tables are functions of the others:
 
-- ``enqueued`` = π(url, url_hash)(``pending`` ∪ ``done``) — a URL is
-  queued with some status iff it is pending or done (``derive_enqueued``);
 - ``seen`` = the ``status = 'completed'`` rows of ``done``, with
-  ``completed_round`` as ``round`` (``derive_seen``).
-
-The in-memory engine keeps all six tables (``run_round`` appends to
-``seen``/``enqueued`` directly); the checkpoint store persists only the
-other four and rebuilds these two with the functions below on load.
+  ``completed_round`` as ``round`` (``derive_seen``). It is derived
+  everywhere: ``CrawlState.seen`` is a read-only property over ``done``,
+  so no transition maintains it and no store persists it;
+- ``enqueued`` = π(url, url_hash)(``pending`` ∪ ``done``) — a URL is
+  queued with some status iff it is pending or done (``derive_enqueued``).
+  It is the one derived table the in-memory engine still maintains: every
+  transition (seeding, ``run_round``, ``cancel``, ``readmit_cancelled``,
+  ``enqueue_seeds``) appends to or filters it, because the dedup
+  anti-join reads it every round. The checkpoint store persists only the
+  four other tables and rebuilds ``enqueued`` on load.
 
 Schemas are fixed ``StructType``s (FIXTURES.md §5) — a strict improvement
 over the reference's code-defined implicit Mongo schemas (SURVEY.md §1.3).
@@ -63,14 +64,6 @@ DONE_SCHEMA = T.StructType(
     + [
         T.StructField("status", T.StringType()),
         T.StructField("completed_round", T.IntegerType()),
-    ]
-)
-
-SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("round", T.IntegerType()),
     ]
 )
 
@@ -116,13 +109,16 @@ class CrawlState:
 
     pending: DataFrame
     done: DataFrame
-    seen: DataFrame
     enqueued: DataFrame
     pages: DataFrame
     metrics: DataFrame
     max_seq: int  # next seq to assign (dense discovery counter)
     round: int  # last completed round (-1 = only seeded)
     pending_count: int = 0  # exact: seeds, then +new -claimed each round
+
+    @property
+    def seen(self) -> DataFrame:
+        return derive_seen(self.done)
 
     def evolve(self, **kw) -> "CrawlState":
         return replace(self, **kw)
@@ -162,7 +158,6 @@ def empty_state(spark: SparkSession, field_names: list[str]) -> CrawlState:
     return CrawlState(
         pending=e(FRONTIER_SCHEMA),
         done=e(DONE_SCHEMA),
-        seen=e(SEEN_SCHEMA),
         enqueued=e(ENQUEUED_SCHEMA),
         pages=e(pages_schema(field_names)),
         metrics=e(METRICS_SCHEMA),

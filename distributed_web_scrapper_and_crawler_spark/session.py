@@ -50,6 +50,19 @@ def probe_table_format() -> str:
         return "parquet-manifest"
 
 
+def local_max_partition_bytes(master: str) -> str | None:
+    """Scan-split size for ``master``: 16m on ``local[...]``, None (Spark's
+    128 MB default) anywhere else.
+
+    The sf tables are single parquet files whose row groups are ~20 MB;
+    on one box the 128 MB default packs a whole file into 1-2 splits,
+    serializing every scan-heavy query on 1-2 of the N local cores, and
+    16 MB splits hand row groups to separate tasks. A cluster scanning
+    many-file tables wants larger splits (fewer tasks, less shuffle fan-out),
+    so the local tuning never rides along to a non-local master."""
+    return "16m" if master.startswith("local") else None
+
+
 def get_spark(
     app_name: str = "dwsc-spark",
     master: str | None = None,
@@ -58,9 +71,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the bench harness can run the same job at two parallelism levels
-    (local[2] vs local[8]) for the N-vs-4N scaling-efficiency evidence.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
 
     If a Delta/Iceberg runtime is present (probe_table_format), the
     session is configured for it so CheckpointStore can write ACID
@@ -79,45 +90,16 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Scan-split sizing (optimization guide §6 / §1.2). The sf tables
-        # are single parquet files whose row groups are ~20 MB; the 128 MB
-        # default packs a whole file into 1-2 splits, serializing every
-        # scan-heavy query on 1-2 of the N local cores. 16 MB splits let
-        # the reader hand row groups to separate tasks (parallelism is
-        # still row-group-bound — parquet cannot split inside a group).
-        # Parameterised: a real cluster scanning 100 TB of many-file
-        # tables wants LARGER splits (512 MB-1 GB, guide §6) to cut task
-        # count and shuffle block fan-out — set the env accordingly there.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
-        # shuffle/spill codec (guide §2.3): measurable A/B knob — the crawl
-        # phases are memory-bandwidth-bound (BENCH.md round-6 root cause),
-        # so a denser codec can trade spare CPU for fewer bytes through
-        # the memory system. Default stays lz4 unless measured otherwise.
-        .config("spark.io.compression.codec", os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # JVM helper-thread sizing for core-pinned runs: a real N-core
-        # executor JVM sizes GC/JIT pools from ITS cores, but this JVM
-        # sees all 32 machine cpus — under `taskset -c 0-(N-1)` the
-        # default 32 GC threads would thrash the N-cpu mask. The scaling
-        # harness sets SPARK_GRAFT_GC_THREADS=N; unset => JVM defaults.
-        .config(
-            "spark.driver.extraJavaOptions",
-            (
-                f"-XX:ParallelGCThreads={os.environ['SPARK_GRAFT_GC_THREADS']} "
-                f"-XX:ConcGCThreads={max(1, int(os.environ['SPARK_GRAFT_GC_THREADS']) // 4)}"
-                if os.environ.get("SPARK_GRAFT_GC_THREADS")
-                else ""
-            ),
-        )
         # shuffle/spill scratch on tmpfs when available: local-mode shuffles
         # otherwise serialize on ext4 write latency and mask CPU scaling
         .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", _default_local_dir()))
     )
+    split = local_max_partition_bytes(master)
+    if split is not None:
+        builder = builder.config("spark.sql.files.maxPartitionBytes", split)
     fmt = probe_table_format()
     if fmt == "delta":
         builder = builder.config(

@@ -133,8 +133,9 @@ def test_lifecycle_mutations_survive_restart(spark, tiny_corpus, tiny_seeds, tmp
     enq_live = eng2.state.enqueued.count()
     del eng2
 
-    # the same lifecycle on an engine without a store, whose seen and
-    # enqueued tables are maintained by every transition, not derived
+    # the same lifecycle on an engine without a store, whose enqueued
+    # table is maintained by every transition, not derived (seen is
+    # derived from done on both sides)
     twin = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg)
     twin.seed(tiny_seeds)
     twin.run(max_rounds=2)
@@ -155,7 +156,7 @@ def test_lifecycle_mutations_survive_restart(spark, tiny_corpus, tiny_seeds, tmp
     assert {u for u in live_cancelled if u in in_corpus} <= seen
 
     # the store holds pending, done, pages and metrics only; resume derives
-    # enqueued and seen equal to the maintained tables, as multisets
+    # enqueued equal to the maintained table, and seen equal, as multisets
     assert _manifest_tables(ckpt) == {("done", "metrics", "pages", "pending")}
     eng4 = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
     eng4.resume()
@@ -228,27 +229,45 @@ def test_compaction_bounds_file_count(spark, tiny_corpus, tiny_seeds, tmp_path):
     assert _tables(eng2.state) == _tables(twin.state)
 
 
-def test_uncollected_stats_stay_null(spark, tiny_corpus, tiny_seeds, tmp_path):
-    """With stats collection off, the metrics table holds NULL — never the
-    -1 sentinel of round_stats — for the uncollected counts, live and after
-    resume."""
-    cfg = CrawlConfig(
-        parity_mode=True, round_budget=32, collect_stats=False, collect_fetch_stats=False
-    )
+def test_round_stats_match_done(spark, tiny_corpus, tiny_seeds, tmp_path):
+    """On the default production config each round's metrics row agrees
+    with the rows the round wrote, live and after resume: urls_claimed and
+    urls_fetched are that round's done and completed rows, dedup_hits is
+    links_found - links_new, and no stat is NULL."""
+    from pyspark.sql import functions as F
+
+    cfg = CrawlConfig(parity_mode=False)
     ckpt = str(tmp_path / "ckpt")
     eng = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
     eng.seed(tiny_seeds)
-    eng.run(max_rounds=2)
-    assert eng.round_stats[-1]["links_found"] == -1
+    eng.run(max_rounds=3)
+    n_rounds = len(eng.round_stats)
+    assert n_rounds >= 2
     eng2 = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, ckpt_dir=ckpt)
     eng2.resume()
-    cols = ("urls_fetched", "links_found", "dedup_hits")
+
+    cols = ("urls_claimed", "urls_fetched", "links_found", "links_new", "dedup_hits")
     for state in (eng.state, eng2.state):
-        rows = state.metrics.select("round", "urls_claimed", *cols).collect()
-        assert sorted(r["round"] for r in rows) == [0, 1]
+        per_round = {
+            r["completed_round"]: (r["claimed"], r["completed"])
+            for r in state.done.groupBy("completed_round")
+            .agg(
+                F.count("*").alias("claimed"),
+                F.count(F.when(F.col("status") == "completed", 1)).alias("completed"),
+            )
+            .collect()
+        }
+        rows = state.metrics.filter("partition_id = -1").select("round", *cols).collect()
+        assert sorted(r["round"] for r in rows) == list(range(n_rounds))
         for r in rows:
-            assert r["urls_claimed"] > 0
-            assert all(r[c] is None for c in cols), r
+            assert all(r[c] is not None for c in cols), r
+            assert (r["urls_claimed"], r["urls_fetched"]) == per_round[r["round"]], r
+            assert r["dedup_hits"] == r["links_found"] - r["links_new"], r
+        assert sum(r["urls_fetched"] for r in rows) > 0
+        assert sum(r["links_found"] for r in rows) > 0
+    for s in eng.round_stats:
+        assert s["urls_fetched"] == per_round[s["round"]][1]
+        assert s["dedup_hits"] == s["links_found"] - s["links_new"]
 
 
 def test_table_format_probe(spark, tmp_path):

@@ -20,8 +20,8 @@ from distributed_web_scrapper_and_crawler_spark.plans.crawl import CrawlEngine
 from tests.oracle import crawl_oracle
 
 
-def _run_engine(spark, corpus, seeds, budget, use_bloom=True, max_rounds=None, **kw):
-    cfg = CrawlConfig(parity_mode=True, round_budget=budget, use_bloom=use_bloom, **kw)
+def _run_engine(spark, corpus, seeds, budget, max_rounds=None, **kw):
+    cfg = CrawlConfig(parity_mode=True, round_budget=budget, **kw)
     eng = CrawlEngine(spark=spark, corpus=corpus, cfg=cfg)
     eng.seed(seeds)
     eng.run(max_rounds=max_rounds)
@@ -86,7 +86,8 @@ def test_depth_semantics(eng_full, oracle):
 
 
 def test_bloom_off_equals_bloom_on(spark, small_corpus, seeds, eng_full):
-    b = _run_engine(spark, small_corpus, seeds, budget=64, use_bloom=False)
+    b = _run_engine(spark, small_corpus, seeds, budget=64, seen_filter="none")
+    assert b.bloom is None
     assert eng_full.claim_order() == b.claim_order()
 
 
@@ -124,6 +125,17 @@ def test_fetch_join_validated():
             CrawlConfig(fetch_join=bad)
     assert CrawlConfig().fetch_join == "broadcast"
     CrawlConfig(fetch_join="copartition")
+
+
+def test_seen_filter_validated():
+    """An unknown seen_filter must raise when the config is built, not
+    only once an engine builds its filter."""
+    for bad in ("cukoo", "Bloom", "", None):
+        with pytest.raises(ValueError, match="seen_filter"):
+            CrawlConfig(seen_filter=bad)
+    assert CrawlConfig().seen_filter == "bloom"
+    for ok in ("bloom", "sharded", "cuckoo", "none"):
+        CrawlConfig(seen_filter=ok)
 
 
 def test_degraded_cuckoo_stays_correct(spark, small_corpus, seeds, eng_full):
