@@ -24,7 +24,7 @@ artifact itself.
 
 The crawl section measures the north-rule metric (URLs scheduled+deduped
 per second) on the real engine: production-mode rounds (per-host window
-budgets, Bloom-prefiltered dedup) over a deterministic synthetic web.
+budgets, anti-join dedup) over a deterministic synthetic web.
 Per-layer numbers (phase spans, jobs per round, UDF time) come from
 ``perfbench/run.py --trace 1``, not from this file.
 """
@@ -182,7 +182,7 @@ def bench_crawl(spark, n_docs: int, rounds: int = 4, seed_frac: float = 0.3) -> 
         # and flat-lines the scaling ratio (PLANS.md ledger)
         salt_hot_hosts=8,
     )
-    eng = CrawlEngine(spark=spark, corpus=corpus, cfg=cfg, bloom_capacity=1 << 22)
+    eng = CrawlEngine(spark=spark, corpus=corpus, cfg=cfg)
     step = max(1, int(1 / seed_frac))
     seeds = [
         f"http://{h}/page/{i}"
@@ -194,7 +194,7 @@ def bench_crawl(spark, n_docs: int, rounds: int = 4, seed_frac: float = 0.3) -> 
     eng.run(max_rounds=rounds)
     wall = time.monotonic() - t0
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # release the engine's retained caches/broadcasts AND the corpus cache
+    # release the engine's retained caches AND the corpus cache
     # before the next best-of-N attempt: leaving them resident would run
     # later attempts under earlier attempts' storage-memory footprint,
     # biasing the comparison toward attempt 0 (ADVICE r5 low)
@@ -203,7 +203,7 @@ def bench_crawl(spark, n_docs: int, rounds: int = 4, seed_frac: float = 0.3) -> 
     claimed = sum(s["urls_claimed"] for s in eng.round_stats)
     links = sum(s["links_found"] for s in eng.round_stats)
     new = sum(s["links_new"] for s in eng.round_stats)
-    # per-phase totals across rounds (claim / links / dedup_seq / bloom_add /
+    # per-phase totals across rounds (claim / links / dedup_seq /
     # materialize), so a slow run can be attributed to its phase
     phases: dict[str, float] = {}
     for s in eng.round_stats:

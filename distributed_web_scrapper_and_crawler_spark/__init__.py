@@ -6,8 +6,8 @@ re-expressed Spark-first:
 
 - the RabbitMQ/Mongo control plane becomes DataFrame *rounds* over
   snapshot-checkpointed state tables (frontier / seen / pages / metrics);
-- the Mongo unique-index dedup becomes Bloom-prefiltered anti-joins on
-  ``xxhash64`` URL fingerprints;
+- the Mongo unique-index dedup becomes one anti-join per round against
+  the enqueued key set on ``xxhash64`` URL fingerprints;
 - the one-URL-at-a-time FIFO dispatcher becomes window-ranked DataFrame
   batches (rank over host, depth, discovery seq);
 - BeautifulSoup extraction becomes vectorized Arrow UDFs over interleaved

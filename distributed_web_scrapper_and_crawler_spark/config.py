@@ -4,7 +4,9 @@ The reference loads a YAML dict (``/root/reference/config.yaml:1-37``) with
 crawler params (``allowed_domains``, ``max_depth``, ``rate_limit``,
 ``start_url``, ``user_agent``) and ``extraction_rules``. Here the same
 surface is a frozen dataclass built on the driver and captured by the
-(broadcast-serialized) Arrow UDF closures.
+(broadcast-serialized) Arrow UDF closures. The robots user agent is not a
+config field: the caller that builds the robots table names it in
+``plans.politeness.parse_robots_txt``.
 
 One flag, ``parity_mode``, chooses reference-parity vs production behavior:
 
@@ -48,9 +50,6 @@ DEFAULT_EXTRACTION_RULES: tuple[ExtractionRule, ...] = tuple(
 )
 
 
-SEEN_FILTERS = ("bloom", "sharded", "cuckoo", "none")
-
-
 @dataclass(frozen=True)
 class CrawlConfig:
     """Engine configuration; defaults mirror the reference's config.yaml."""
@@ -58,7 +57,6 @@ class CrawlConfig:
     allowed_domains: tuple[str, ...] = ("example.test",)
     max_depth: int = 3
     rate_limit: float = 1.0  # seconds between requests per host (production mode)
-    user_agent: str = "DWSC-Spark/0.1"
     extraction_rules: tuple[ExtractionRule, ...] = DEFAULT_EXTRACTION_RULES
 
     # --- engine behavior ------------------------------------------------
@@ -82,23 +80,15 @@ class CrawlConfig:
     # hot host's rank doesn't funnel through one task (north-rule skew
     # handling). Trades strict per-host FIFO for per-(host,salt) FIFO.
     salt_hot_hosts: int = 0
-    # Pre-filter in front of the ground-truth anti-join: 'bloom' (default:
-    # one flat filter, mergeable partials), 'sharded' (bits split by
-    # pmod(url_hash, bloom_shards) — the 10^10 path: no single
-    # broadcast/merge exceeds one shard's bits), 'cuckoo' (supports DELETE
-    # => cancelled-URL re-admission without a rebuild; degrades to
-    # always-maybe after overflow/delete), or 'none' (every link pays the
-    # anti-join).
-    seen_filter: str = "bloom"
-    bloom_shards: int = 16
-    # Fetch-join strategy: "broadcast" ships the (budget-bounded) claim
-    # batch to every corpus partition so the corpus side never shuffles.
-    # "copartition" shuffles ONLY the claim side into the corpus's existing
-    # hash partitioning (corpus must be cached pre-partitioned on its
-    # doc_id/url key) with a per-partition hash build — no driver-side
-    # broadcast collect+build (that build is serial time every round,
-    # identical at every cluster size), and no bound on claim size. The
-    # bucket-join analog for an Iceberg corpus.
+    # Fetch-join strategy: "broadcast" (the default) leaves the join to the
+    # planner. The claim is the preserved side of a left join, so Spark
+    # never broadcasts it: it broadcasts the corpus when that is small and
+    # otherwise shuffles both sides. "copartition" shuffles ONLY the claim
+    # side into the corpus's existing hash partitioning (corpus must be
+    # cached pre-partitioned on its doc_id/url key) with a per-partition
+    # hash build — no driver-side broadcast collect+build (serial time
+    # every round, identical at every cluster size), and no bound on claim
+    # size. The bucket-join analog for an Iceberg corpus.
     fetch_join: str = "broadcast"
     # Keep the write-only output tables (done/pages/metrics) as lazy
     # unions over retained round caches instead of checkpointing them every
@@ -109,16 +99,10 @@ class CrawlConfig:
 
     def __post_init__(self) -> None:
         # round.py dispatches on == 'copartition'; without this a typo
-        # would silently run the broadcast join
+        # would silently run the default join
         if self.fetch_join not in ("broadcast", "copartition"):
             raise ValueError(
                 f"unknown fetch_join {self.fetch_join!r}: use broadcast|copartition"
-            )
-        # checked here, not where the engine builds its filter, so a typo
-        # fails at construction whichever path reads the config
-        if self.seen_filter not in SEEN_FILTERS:
-            raise ValueError(
-                f"unknown seen_filter {self.seen_filter!r}: use {'|'.join(SEEN_FILTERS)}"
             )
 
     def field_names(self) -> list[str]:

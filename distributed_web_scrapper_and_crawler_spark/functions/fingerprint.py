@@ -6,7 +6,7 @@ needlessly wide; the engine fingerprints with the built-in ``xxhash64``
 (JVM-side, codegen'd) and joins on ``(url_hash, url)`` — the 64-bit
 birthday collision mass at 10^10 keys (~0.3%) makes hash-only joins
 unsafe for ground truth, so the string rides along for exactness while
-the hash drives partitioning, Bloom filters, and join keys.
+the hash drives partitioning and join keys.
 """
 
 from __future__ import annotations

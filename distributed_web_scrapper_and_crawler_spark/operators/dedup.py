@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-The crawl engine dedups URLs (operators/bloom.py + anti-joins); this
+The crawl engine dedups URLs (anti-joins in plans/round.py); this
 module dedups *content* — the other half of a web-scale corpus pipeline:
 
 - exact dedup: hash-groupBy on a content fingerprint;

@@ -19,10 +19,6 @@ from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import (
     allowed_domain_filter,
     canonicalize_udf,
 )
-from distributed_web_scrapper_and_crawler_spark.operators.bloom import (
-    NumpyBloom,
-    add_df_to_filter,
-)
 from distributed_web_scrapper_and_crawler_spark.plans.checkpoint import (
     APPEND_TABLES,
     CheckpointStore,
@@ -30,9 +26,6 @@ from distributed_web_scrapper_and_crawler_spark.plans.checkpoint import (
 from distributed_web_scrapper_and_crawler_spark.plans.round import run_round
 from distributed_web_scrapper_and_crawler_spark.plans.seq import assign_global_seq
 from distributed_web_scrapper_and_crawler_spark.plans.state import CrawlState, empty_state
-
-# false-positive rate the flat and sharded Bloom filters are sized for
-BLOOM_FPP = 0.01
 
 
 @dataclass
@@ -42,10 +35,8 @@ class CrawlEngine:
     cfg: CrawlConfig
     ckpt_dir: str | None = None
     checkpoint_every: int = 1  # rounds between durable snapshots
-    bloom_capacity: int = 1 << 20
     robots: DataFrame | None = None
     state: CrawlState | None = None
-    bloom: NumpyBloom | None = None
     round_stats: list[dict] = field(default_factory=list)
     _retained_caches: list = field(default_factory=list)
     # deltas of rounds completed since the last durable commit
@@ -53,27 +44,16 @@ class CrawlEngine:
     # round's done/pages/metrics rows are ever dropped from the store
     _buffered_deltas: dict = field(default_factory=dict)
 
-    @staticmethod
-    def _release(c) -> None:
-        # cached DataFrames unpersist; per-round shard Broadcasts destroy
-        # (unpersist alone keeps the driver-side pickled bitmaps alive)
-        if hasattr(c, "destroy"):
-            c.destroy()
-        else:
-            c.unpersist()
-
     def flush_caches(self, materialize: bool = True) -> None:
-        """Release caches/broadcasts retained by lazy_output_tables.
+        """Unpersist the round caches retained by lazy_output_tables.
 
-        Per-round shard broadcasts are ``destroy()``ed — required to free
-        the driver-side pickled bitmaps (the r2 leak) — so any
-        still-lazy plan referencing them will FAIL with "Broadcast ...
-        destroyed" afterwards, not merely recompute. With
-        ``materialize=True`` (default) the state tables are
-        ``localCheckpoint()``ed first, so post-flush reads of ``state.*``
-        stay safe; internal durable commits pass ``materialize=False``
-        because state was just reloaded from the parquet store and
-        references nothing retained."""
+        A still-lazy plan over a released cache recomputes its whole
+        round from lineage on its next read. With ``materialize=True``
+        (default) the state tables are ``localCheckpoint()``ed first, so
+        post-flush reads of ``state.*`` stay cheap; internal durable
+        commits pass ``materialize=False`` because state was just
+        reloaded from the parquet store and references nothing
+        retained."""
         if materialize and self._retained_caches and self.state is not None:
             st = self.state
             self.state = st.evolve(
@@ -84,36 +64,19 @@ class CrawlEngine:
             )
         if materialize and self._retained_caches and self._buffered_deltas:
             # buffered (not-yet-durable) deltas are lazy plans over the same
-            # retained caches/broadcasts: pin them too, or the eventual
-            # flush_to_store() would read destroyed broadcasts
+            # retained caches: pin them too, or the eventual flush_to_store()
+            # would re-run their rounds from lineage
             self._buffered_deltas = {
                 k: v.localCheckpoint() for k, v in self._buffered_deltas.items()
             }
         for c in self._retained_caches:
-            self._release(c)
+            c.unpersist()
         self._retained_caches.clear()
 
     def __post_init__(self):
         self.store = (
             CheckpointStore(self.spark, self.ckpt_dir) if self.ckpt_dir else None
         )
-        if self.cfg.seen_filter != "none":
-            self.bloom = self._new_filter()
-
-    def _new_filter(self):
-        if self.cfg.seen_filter == "cuckoo":
-            from distributed_web_scrapper_and_crawler_spark.operators.bloom import CuckooFilter
-
-            return CuckooFilter(capacity=self.bloom_capacity)
-        if self.cfg.seen_filter == "sharded":
-            from distributed_web_scrapper_and_crawler_spark.operators.bloom import ShardedBloom
-
-            return ShardedBloom(
-                n_shards=self.cfg.bloom_shards,
-                expected_n=self.bloom_capacity,
-                fpp=BLOOM_FPP,
-            )
-        return NumpyBloom.sized(self.bloom_capacity, BLOOM_FPP)
 
     # -- seeding (scheduler.py:62-117 / seed_urls.py:32-94) ---------------
     def seed(self, urls: list[str]) -> CrawlState:
@@ -150,8 +113,6 @@ class CrawlEngine:
             round=-1,
             pending_count=n,
         )
-        if self.bloom is not None and n:
-            add_df_to_filter(self.bloom, pending, "url_hash")
         if self.store is not None:
             # commit the seeded state as round -1: the seeds' enqueued-set
             # membership must survive a restart or they would be re-crawled
@@ -195,8 +156,6 @@ class CrawlEngine:
             F.lit("seed").alias("added_by"),
         ).localCheckpoint()
         if n:
-            if self.bloom is not None:
-                add_df_to_filter(self.bloom, rows, "url_hash")
             self.state = st.evolve(
                 pending=st.pending.unionByName(rows),
                 enqueued=st.enqueued.unionByName(rows.select("url", "url_hash")),
@@ -246,10 +205,7 @@ class CrawlEngine:
         """Make cancelled URLs enqueueable again — the deletable-entry path
         the reference cannot express (its "any status" queue check blocks
         cancelled URLs forever, server.py:440-443). Removes them from the
-        ``enqueued`` key set and the seen-filter: a CuckooFilter deletes
-        in place; a Bloom filter cannot delete, so it is rebuilt from the
-        ground truth (the documented cost of choosing bloom over cuckoo
-        when cancellation traffic exists)."""
+        ``enqueued`` key set that every round's dedup anti-joins against."""
         assert self.state is not None
         self.flush_to_store()
         st = self.state
@@ -261,41 +217,15 @@ class CrawlEngine:
         new_enqueued = st.enqueued.join(cancelled, ["url_hash", "url"], "left_anti").localCheckpoint()
         new_done = st.done.filter(F.col("status") != "cancelled").localCheckpoint()
         self.state = st.evolve(enqueued=new_enqueued, done=new_done, round=st.round + 1)
-        if self.bloom is not None:
-            from distributed_web_scrapper_and_crawler_spark.operators.bloom import CuckooFilter
-
-            if isinstance(self.bloom, CuckooFilter):
-                # chunked delete: drain hashes one partition at a time so a
-                # large cancel wave never materializes as one driver list
-                import numpy as np
-                import pandas as pd
-
-                def per_partition(it):
-                    for pdf in it:
-                        if len(pdf):
-                            yield pd.DataFrame(
-                                {"hashes": [np.asarray(pdf["url_hash"], dtype=np.int64).tobytes()]}
-                            )
-
-                chunks = cancelled.select("url_hash").mapInPandas(per_partition, "hashes binary")
-                for row in chunks.toLocalIterator():
-                    self.bloom.delete(np.frombuffer(row["hashes"], dtype=np.int64))
-            else:
-                self.bloom = self._new_filter()
-                add_df_to_filter(self.bloom, new_enqueued, "url_hash")
         # removal is not append-expressible => full snapshot commit
         self._commit_lifecycle(snapshot=True)
         return n
 
     def resume(self) -> CrawlState:
-        """Reload the latest committed snapshot; rebuild the Bloom filter
-        from the ``enqueued`` ground truth (filters are derived state —
-        never checkpointed, never trusted across restarts)."""
+        """Reload the latest committed snapshot; the store derives
+        ``enqueued`` and ``seen`` from it on load."""
         assert self.store is not None, "resume requires ckpt_dir"
         self.state = self.store.load_state(self.cfg.field_names())
-        if self.cfg.seen_filter != "none":
-            self.bloom = self._new_filter()
-            add_df_to_filter(self.bloom, self.state.enqueued, "url_hash")
         return self.state
 
     # -- the loop ---------------------------------------------------------
@@ -308,7 +238,6 @@ class CrawlEngine:
                 self.state,
                 self.corpus,
                 self.cfg,
-                bloom=self.bloom,
                 robots=self.robots,
                 collect_partition_metrics=collect_partition_metrics,
             )
@@ -394,7 +323,7 @@ class CrawlEngine:
             if self.cfg.lazy_output_tables:
                 # lazy (eager=False) checkpoints: materialization folds into
                 # the NEXT round's first action over each table (claim for
-                # pending, the dedup probe for enqueued) instead of costing
+                # pending, the dedup anti-join for enqueued) instead of costing
                 # two dedicated driver-scheduled jobs per round — measured
                 # ~1 s/round of flat serial time on the crawl bench. Safe
                 # here because this mode retains the round caches the lazy
@@ -424,7 +353,7 @@ class CrawlEngine:
             self._retained_caches.extend(res.caches)  # lazy deltas still need them
         else:
             for c in res.caches:
-                self._release(c)
+                c.unpersist()
 
     # -- observability ----------------------------------------------------
     def register_views(self, prefix: str = "crawl_") -> list[str]:

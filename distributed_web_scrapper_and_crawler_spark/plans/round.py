@@ -7,7 +7,7 @@ declarative plan over a whole batch::
     pending --window/limit--> claim --inner join corpus--> fetched
       fetched --Arrow UDFs--> pages + exploded links
       links --canonicalize/allow/dedup--> candidates
-      candidates --bloom prefilter + anti-join enqueued--> new frontier rows
+      candidates --anti-join enqueued--> new frontier rows
       state' = (pending - claim + new, done + claim, enqueued + new, ...)
 
 Every boundary that was a socket / broker hop / Mongo round-trip in the
@@ -15,19 +15,17 @@ reference (server.py:378-414, distributed_crawler.py:282-291) is a
 shuffle or a broadcast here, planned by Catalyst + AQE.
 
 Scale notes (the 100 TB design points):
-- claim⋈corpus: claim is usually the small side early on => AQE picks
-  broadcast; at steady state both sides are large — on a real cluster
-  the corpus is bucketed by ``url`` so this is a shuffle-free bucket
-  join (local-mode parquet can't bucket; documented, not faked).
-- dedup anti-join: the Bloom prefilter removes the definite-negatives
-  (~all links in steady state) from the shuffle; only the maybe-dup
-  residue joins against ``enqueued``.
-- intra-batch dedup window partitions by (url_hash, url) — same key as
-  the anti-join, so the exchange is reused, and hot-host skew lands on
+- claim⋈corpus: a ``left`` join from the claim side, so Spark may
+  broadcast only the corpus side; when the corpus is small it does,
+  otherwise both sides shuffle. On a real cluster the corpus is
+  bucketed by ``url`` so this is a shuffle-free bucket join, which
+  ``fetch_join="copartition"`` models (local-mode parquet can't bucket;
+  documented, not faked).
+- dedup: the intra-batch aggregate and the anti-join against
+  ``enqueued`` both key on (url_hash, url), and hot-host skew lands on
   AQE's skew-join handling (hash keys spread hot *hosts* anyway).
 - no ``collect()`` anywhere in the data path; the only driver traffic
-  is bucket counts and the round's stats (tiny) and per-partition bloom
-  bitmaps.
+  is bucket counts and the round's stats (tiny).
 """
 
 from __future__ import annotations
@@ -40,11 +38,6 @@ from pyspark.sql import functions as F
 
 from distributed_web_scrapper_and_crawler_spark.config import CrawlConfig
 from distributed_web_scrapper_and_crawler_spark.functions.canonicalize import allowed_domain_filter
-from distributed_web_scrapper_and_crawler_spark.operators.bloom import (
-    NumpyBloom,
-    add_df_to_filter,
-    filter_maybe_contains_udf,
-)
 from distributed_web_scrapper_and_crawler_spark.operators.extract import (
     extract_fields_udf,
     link_rows,
@@ -75,14 +68,12 @@ def run_round(
     state: CrawlState,
     corpus: DataFrame,
     cfg: CrawlConfig,
-    bloom: NumpyBloom | None = None,
     robots: DataFrame | None = None,
     collect_partition_metrics: bool = False,
 ) -> RoundResult:
     rnd = state.round + 1
     t0 = time.monotonic()
 
-    round_broadcasts: list = []  # per-round shard broadcasts (released with caches)
     phase_t: dict[str, float] = {}
 
     def _mark(name: str, t_start: float) -> None:
@@ -105,19 +96,19 @@ def run_round(
 
     # -- fetch: join the claimed batch against the corpus (the "network") --
     # The claim batch is budget-bounded (small); the corpus is the 100 TB
-    # side. Broadcasting the claim keeps the corpus UNSHUFFLED — without
-    # it every round pays a full corpus exchange. On a real cluster the
-    # equivalent is a bucket join on the Iceberg corpus, which
+    # side. The claim is the preserved side of a left join, so Spark can
+    # never broadcast it: the planner broadcasts the corpus when it is
+    # small and otherwise shuffles both sides. On a real cluster the
+    # unshuffled corpus is a bucket join on the Iceberg corpus, which
     # fetch_join="copartition" models (no bound on claim size).
     corpus_keyed = corpus.withColumnRenamed("doc_id", "url")
+    claim_side = claim
     if cfg.fetch_join == "copartition":
         # corpus is cached hash-partitioned on the key: only the ~budget-
         # sized claim side shuffles, and each task builds a tiny hash table
-        # of its claim partition — removes the broadcast's driver-side
-        # collect+build (serial per round at any cluster size)
+        # of its claim partition — no driver-side broadcast collect+build
+        # (serial per round at any cluster size)
         claim_side = claim.hint("shuffle_hash")
-    else:
-        claim_side = F.broadcast(claim)
     # ONE left join yields both outcomes: matched rows are the fetch,
     # null-extended rows are the failures — the separate claim ⋈ fetched
     # anti-join used to cost a second join (and a second driver-side
@@ -194,43 +185,14 @@ def run_round(
     unique_links = unique_links.drop("_dups")
     _mark("links", t)
 
-    # -- cross-round dedup: bloom prefilter + ground-truth anti-join -------
-    # The "definitely new skips the anti-join" shortcut is only sound for
-    # filters with ZERO false negatives (Bloom/ShardedBloom always; a
-    # CuckooFilter until an overflowed insert or a delete sets .degraded —
-    # then every link pays the anti-join: slower, never wrong).
-    if bloom is not None and not getattr(bloom, "degraded", False):
-        from distributed_web_scrapper_and_crawler_spark.operators.bloom import (
-            ShardedBloom,
-            sharded_probe_maybe,
-        )
-
-        if isinstance(bloom, ShardedBloom):
-            # shard-local probe: tasks fetch only their shard's bits; the
-            # per-round shard broadcasts ride the round's cache lifecycle
-            # (destroyed once the round's state is materialized) so a long
-            # crawl doesn't accumulate one bitmap set per round
-            flagged = sharded_probe_maybe(
-                spark, bloom, unique_links, "url_hash", out_broadcasts=round_broadcasts
-            )
-        else:
-            maybe = filter_maybe_contains_udf(spark, bloom)
-            flagged = unique_links.withColumn("_maybe", maybe("url_hash"))
-        definite_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-        residue = (
-            flagged.filter(F.col("_maybe"))
-            .drop("_maybe")
-            .join(state.enqueued, ["url_hash", "url"], "left_anti")
-        )
-        new_links = definite_new.unionByName(residue)
-    else:
-        new_links = unique_links.join(state.enqueued, ["url_hash", "url"], "left_anti")
+    # -- cross-round dedup: ground-truth anti-join against enqueued -------
+    new_links = unique_links.join(state.enqueued, ["url_hash", "url"], "left_anti")
 
     # -- dense discovery seq (deterministic ordering backbone) -------------
     # cache BEFORE assign_global_seq: its bucket-count action is the first
     # pass over the dedup pipeline; without the cache every downstream
-    # consumer (bloom add, pending/enqueued deltas) re-runs the window +
-    # anti-join + probe-UDF chain from scratch.
+    # consumer (pending/enqueued deltas) re-runs the aggregate + anti-join
+    # chain from scratch.
     t = time.monotonic()
     candidates = new_links.cache()
     new_links, n_new = assign_global_seq(candidates, start=state.max_seq)
@@ -257,15 +219,6 @@ def run_round(
         )
     )
     enqueued_delta = pending_delta.select("url", "url_hash")
-
-    if bloom is not None and n_new and not getattr(bloom, "degraded", False):
-        # a degraded filter is never consulted again — skip maintaining it.
-        # Fold from the CACHED pre-seq candidates: the url_hash set is
-        # identical to new_links', and reading new_links here would re-run
-        # the seq window + offset join once more per round.
-        t = time.monotonic()
-        add_df_to_filter(bloom, candidates, "url_hash")
-        _mark("bloom_add", t)
 
     wall_ms = int((time.monotonic() - t0) * 1000)
     stats = {
@@ -307,5 +260,5 @@ def run_round(
         deltas,
         stats,
         drained=False,
-        caches=(claim, joined, unique_links, candidates, *round_broadcasts),
+        caches=(claim, joined, unique_links, candidates),
     )

@@ -1,7 +1,7 @@
 """Custom stateful streaming operators (applyInPandasWithState).
 
-The batch engine's seen-set is a Bloom-prefiltered anti-join against an
-Iceberg-style keys table (plans/round.py). In a pure Structured
+The batch engine's seen-set is an anti-join against an Iceberg-style
+keys table (plans/round.py). In a pure Structured
 Streaming deployment the same invariant — "each URL is admitted at most
 once, forever" — becomes per-key state inside the stream:
 ``dedup_url_stream`` keeps a per-HOST set of admitted url_hashes in

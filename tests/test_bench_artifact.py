@@ -42,7 +42,7 @@ def _representative_inputs():
         "scheduled_per_sec": 12640.9,
         "phases": {
             "claim": 8.298, "links": 77.511, "dedup_seq": 27.841,
-            "bloom_add": 4.13, "fetched_count": 0.0, "materialize": 4.212,
+            "materialize": 4.212,
         },
         "steal_ticks": 43656,
         "quiet_gate": {"waited_sec": 300.0, "last_window_ticks": 1234, "quiet": False},

@@ -1,19 +1,16 @@
 """Cancel + re-admission lifecycle — the deletable-entry capability the
 reference lacks (cancelled URLs are blocked forever by its any-status
-queue check, server.py:440-443). Covered with both seen-filter kinds:
-cuckoo (in-place delete) and bloom (rebuild)."""
+queue check, server.py:440-443). Re-admission removes the cancelled URLs
+from the ``enqueued`` key set the round's dedup anti-joins against."""
 
 from __future__ import annotations
-
-import pytest
 
 from distributed_web_scrapper_and_crawler_spark.config import CrawlConfig
 from distributed_web_scrapper_and_crawler_spark.plans.crawl import CrawlEngine
 
 
-@pytest.mark.parametrize("filter_kind", ["bloom", "cuckoo", "sharded"])
-def test_cancel_then_readmit_then_recrawl(spark, tiny_corpus, tiny_seeds, filter_kind):
-    cfg = CrawlConfig(parity_mode=True, round_budget=8, seen_filter=filter_kind)
+def test_cancel_then_readmit_then_recrawl(spark, tiny_corpus, tiny_seeds):
+    cfg = CrawlConfig(parity_mode=True, round_budget=8)
     eng = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg)
     eng.seed(tiny_seeds)
     # one round is enough state for the lifecycle under test: done rows to
@@ -41,14 +38,3 @@ def test_cancel_then_readmit_then_recrawl(spark, tiny_corpus, tiny_seeds, filter
         if u in in_corpus:
             assert u in seen
 
-
-def test_cuckoo_engine_matches_bloom_engine(spark, tiny_corpus, tiny_seeds, tiny_uninterrupted):
-    """The seen filter is a correctness-neutral prefilter: a cuckoo engine
-    must claim in exactly the order of the shared bloom-engine reference
-    (tiny_uninterrupted; budgets never bind on the tiny corpus, so the
-    comparison also pins budget invariance)."""
-    cfg = CrawlConfig(parity_mode=True, round_budget=64, seen_filter="cuckoo")
-    eng = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg, bloom_capacity=1 << 14)
-    eng.seed(tiny_seeds)
-    eng.run()
-    assert eng.claim_order() == tiny_uninterrupted["claims"]

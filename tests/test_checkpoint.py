@@ -338,19 +338,16 @@ def test_delta_branch_exercised_with_stub(spark, tmp_path, monkeypatch):
 
 
 def test_flush_caches_pins_buffered_deltas(spark, tiny_corpus, tiny_seeds, tmp_path, tiny_uninterrupted):
-    """flush_caches(materialize=True) destroys retained broadcasts; buffered
-    (not-yet-durable) deltas from checkpoint_every > 1 are lazy plans over
-    those broadcasts and must be localCheckpointed first, or the eventual
-    flush_to_store() dies with 'Broadcast destroyed' and the buffered rounds
-    are unrecoverable (ADVICE r4 medium)."""
-    # sharded filter: the one mode whose retained handles are Broadcasts
-    # (destroy()ed, not unpersisted => lazy readers fail, never recompute)
+    """flush_caches(materialize=True) unpersists the retained round caches;
+    buffered (not-yet-durable) deltas from checkpoint_every > 1 are lazy
+    plans over those caches and must be localCheckpointed first, so the
+    eventual flush_to_store() writes pinned rows instead of re-running the
+    buffered rounds from lineage (ADVICE r4 medium). The resumed crawl must
+    end exactly where an uninterrupted one does."""
     cfg = CrawlConfig(
         parity_mode=True,
         round_budget=32,
         lazy_output_tables=True,
-        seen_filter="sharded",
-        bloom_shards=4,
     )
     ckpt = str(tmp_path / "ckpt")
     eng = CrawlEngine(
@@ -358,16 +355,16 @@ def test_flush_caches_pins_buffered_deltas(spark, tiny_corpus, tiny_seeds, tmp_p
     )
     eng.seed(tiny_seeds)
     # round 1 is non-durable: its deltas sit in _buffered_deltas as lazy
-    # plans over the caches/broadcasts retained by lazy_output_tables
+    # plans over the caches retained by lazy_output_tables
     for _ in range(2):
         from distributed_web_scrapper_and_crawler_spark.plans.round import run_round
 
-        res = run_round(eng.spark, eng.state, eng.corpus, eng.cfg, bloom=eng.bloom)
+        res = run_round(eng.spark, eng.state, eng.corpus, eng.cfg)
         assert not res.drained
         eng._materialize(res)
     assert eng._buffered_deltas and eng._retained_caches
     eng.flush_caches(materialize=True)  # user frees memory mid-crawl
-    eng.flush_to_store()  # must NOT hit destroyed broadcasts
+    eng.flush_to_store()  # writes the pinned buffered rounds
     eng.run()  # finish the crawl
 
     eng2 = CrawlEngine(
@@ -376,3 +373,19 @@ def test_flush_caches_pins_buffered_deltas(spark, tiny_corpus, tiny_seeds, tmp_p
     eng2.resume()
     eng2.run()
     assert _collect_state(eng2) == tiny_uninterrupted
+
+
+def test_store_less_rounds_leave_no_driver_temp_files(spark, tiny_corpus, tiny_seeds):
+    """A round broadcasts nothing from Python. Every Python broadcast
+    pickles its value into the driver's temp dir and keeps the file until
+    it is destroyed, so a crawl that left one per round would grow the
+    driver's disk with the crawl's length."""
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    eng = CrawlEngine(
+        spark=spark, corpus=tiny_corpus, cfg=CrawlConfig(parity_mode=True, round_budget=1)
+    )
+    eng.seed(tiny_seeds)
+    eng.run(max_rounds=3)
+    assert len(eng.round_stats) == 3
+    assert set(os.listdir(temp_dir)) - before == set()

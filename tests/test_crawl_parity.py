@@ -85,24 +85,6 @@ def test_depth_semantics(eng_full, oracle):
     assert got == want
 
 
-def test_bloom_off_equals_bloom_on(spark, small_corpus, seeds, eng_full):
-    b = _run_engine(spark, small_corpus, seeds, budget=64, seen_filter="none")
-    assert b.bloom is None
-    assert eng_full.claim_order() == b.claim_order()
-
-
-def test_sharded_filter_full_parity(spark, small_corpus, seeds, oracle):
-    """The 10^10 seen-filter (seen_filter='sharded', distributed per-shard
-    fold) must leave crawl semantics untouched: full oracle parity on
-    claim order + seen membership (VERDICT r1 #1 done-criterion)."""
-    from distributed_web_scrapper_and_crawler_spark.operators.bloom import ShardedBloom
-
-    eng = _run_engine(spark, small_corpus, seeds, budget=64, seen_filter="sharded", bloom_shards=8)
-    assert isinstance(eng.bloom, ShardedBloom)  # not silently a flat bloom
-    assert eng.claim_order() == oracle.claim_order
-    assert {r["url"] for r in eng.state.seen.select("url").collect()} == oracle.seen
-
-
 def test_copartition_fetch_join_parity(spark, small_corpus, seeds, eng_full):
     """fetch_join='copartition' (claim-side-only shuffle into the corpus's
     cached hash partitioning — the broadcast-free bench/scale path) must
@@ -125,31 +107,6 @@ def test_fetch_join_validated():
             CrawlConfig(fetch_join=bad)
     assert CrawlConfig().fetch_join == "broadcast"
     CrawlConfig(fetch_join="copartition")
-
-
-def test_seen_filter_validated():
-    """An unknown seen_filter must raise when the config is built, not
-    only once an engine builds its filter."""
-    for bad in ("cukoo", "Bloom", "", None):
-        with pytest.raises(ValueError, match="seen_filter"):
-            CrawlConfig(seen_filter=bad)
-    assert CrawlConfig().seen_filter == "bloom"
-    for ok in ("bloom", "sharded", "cuckoo", "none"):
-        CrawlConfig(seen_filter=ok)
-
-
-def test_degraded_cuckoo_stays_correct(spark, small_corpus, seeds, eng_full):
-    """A degraded cuckoo filter (overflow or delete => false negatives
-    possible; the flag itself is unit-tested in test_bloom) must route
-    EVERY link through the ground-truth anti-join mid-crawl and still
-    produce the exact claim order (no duplicate enqueues)."""
-    cfg = CrawlConfig(parity_mode=True, round_budget=64, seen_filter="cuckoo")
-    eng = CrawlEngine(spark=spark, corpus=small_corpus, cfg=cfg)
-    eng.seed(seeds)
-    eng.run(max_rounds=1)
-    eng.bloom.degraded = True  # simulate an overflow event mid-crawl
-    eng.run()
-    assert eng.claim_order() == eng_full.claim_order()
 
 
 def test_interrupted_equals_uninterrupted(spark, small_corpus, seeds, eng_full):

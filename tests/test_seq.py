@@ -83,9 +83,9 @@ def test_metrics_delta_is_local_table_scan(spark, tiny_corpus, tiny_seeds):
     cfg = CrawlConfig(parity_mode=True, round_budget=32)
     eng = CrawlEngine(spark=spark, corpus=tiny_corpus, cfg=cfg)
     eng.seed(tiny_seeds)
-    res = run_round(spark, eng.state, tiny_corpus, cfg, bloom=eng.bloom)
+    res = run_round(spark, eng.state, tiny_corpus, cfg)
     for c in res.caches:
-        eng._release(c)
+        c.unpersist()
     plan = res.deltas["metrics"]._jdf.queryExecution().executedPlan().toString()
     assert plan.startswith("LocalTableScan"), plan
 
