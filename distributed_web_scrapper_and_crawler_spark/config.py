@@ -80,7 +80,7 @@ class CrawlConfig:
     # hot host's rank doesn't funnel through one task (north-rule skew
     # handling). Trades strict per-host FIFO for per-(host,salt) FIFO.
     salt_hot_hosts: int = 0
-    # Fetch-join strategy: "broadcast" (the default) leaves the join to the
+    # Fetch-join strategy: "auto" (the default) leaves the join to the
     # planner. The claim is the preserved side of a left join, so Spark
     # never broadcasts it: it broadcasts the corpus when that is small and
     # otherwise shuffles both sides. "copartition" shuffles ONLY the claim
@@ -89,7 +89,7 @@ class CrawlConfig:
     # hash build — no driver-side broadcast collect+build (serial time
     # every round, identical at every cluster size), and no bound on claim
     # size. The bucket-join analog for an Iceberg corpus.
-    fetch_join: str = "broadcast"
+    fetch_join: str = "auto"
     # Keep the write-only output tables (done/pages/metrics) as lazy
     # unions over retained round caches instead of checkpointing them every
     # round. Each skipped checkpoint is a serial driver job; the bench.py
@@ -100,10 +100,8 @@ class CrawlConfig:
     def __post_init__(self) -> None:
         # round.py dispatches on == 'copartition'; without this a typo
         # would silently run the default join
-        if self.fetch_join not in ("broadcast", "copartition"):
-            raise ValueError(
-                f"unknown fetch_join {self.fetch_join!r}: use broadcast|copartition"
-            )
+        if self.fetch_join not in ("auto", "copartition"):
+            raise ValueError(f"unknown fetch_join {self.fetch_join!r}: use auto|copartition")
 
     def field_names(self) -> list[str]:
         return [r.field for r in self.extraction_rules]

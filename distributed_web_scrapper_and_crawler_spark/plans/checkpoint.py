@@ -153,8 +153,10 @@ class CheckpointStore:
                 # files. A shuffle, not a plain coalesce: coalesce would run
                 # this round's delta plan (the pages extraction UDF) inside
                 # the n_files tasks too. Hashing on every column keeps the
-                # exchange deterministic without a sort.
-                base = self._read(None, prior_paths) if self.storage_format == "delta" else self.spark.read.parquet(*prior_paths)
+                # exchange deterministic without a sort. The chain is read
+                # with the table's own schema: a bare parquet read would
+                # launch a schema-inference job per table.
+                base = self._read(getattr(state, name).schema, prior_paths)
                 combined = base.unionByName(deltas[name]) if name in deltas else base
                 n_files = max(1, math.ceil(_dir_bytes(prior_paths) / COMPACT_FILE_BYTES))
                 self._write(combined.repartition(n_files, *combined.columns), dpath)

@@ -15,12 +15,12 @@ reference (server.py:378-414, distributed_crawler.py:282-291) is a
 shuffle or a broadcast here, planned by Catalyst + AQE.
 
 Scale notes (the 100 TB design points):
-- claim⋈corpus: a ``left`` join from the claim side, so Spark may
-  broadcast only the corpus side; when the corpus is small it does,
-  otherwise both sides shuffle. On a real cluster the corpus is
-  bucketed by ``url`` so this is a shuffle-free bucket join, which
-  ``fetch_join="copartition"`` models (local-mode parquet can't bucket;
-  documented, not faked).
+- claim⋈corpus: a ``left`` join from the claim side, so under
+  ``fetch_join="auto"`` Spark may broadcast only the corpus side; when
+  the corpus is small it does, otherwise both sides shuffle. On a real
+  cluster the corpus is bucketed by ``url`` so this is a shuffle-free
+  bucket join, which ``fetch_join="copartition"`` models (local-mode
+  parquet can't bucket; documented, not faked).
 - dedup: the intra-batch aggregate and the anti-join against
   ``enqueued`` both key on (url_hash, url), and hot-host skew lands on
   AQE's skew-join handling (hash keys spread hot *hosts* anyway).
@@ -97,10 +97,11 @@ def run_round(
     # -- fetch: join the claimed batch against the corpus (the "network") --
     # The claim batch is budget-bounded (small); the corpus is the 100 TB
     # side. The claim is the preserved side of a left join, so Spark can
-    # never broadcast it: the planner broadcasts the corpus when it is
-    # small and otherwise shuffles both sides. On a real cluster the
-    # unshuffled corpus is a bucket join on the Iceberg corpus, which
-    # fetch_join="copartition" models (no bound on claim size).
+    # never broadcast it: under fetch_join="auto" the planner broadcasts
+    # the corpus when it is small and otherwise shuffles both sides. On a
+    # real cluster the unshuffled corpus is a bucket join on the Iceberg
+    # corpus, which fetch_join="copartition" models (no bound on claim
+    # size).
     corpus_keyed = corpus.withColumnRenamed("doc_id", "url")
     claim_side = claim
     if cfg.fetch_join == "copartition":

@@ -102,10 +102,10 @@ def test_copartition_fetch_join_parity(spark, small_corpus, seeds, eng_full):
 def test_fetch_join_validated():
     """An unknown fetch_join must raise, not silently run a join the
     caller did not ask for."""
-    for bad in ("copartion", "shuffle", None):
+    for bad in ("copartion", "shuffle", "broadcast", None):
         with pytest.raises(ValueError, match="fetch_join"):
             CrawlConfig(fetch_join=bad)
-    assert CrawlConfig().fetch_join == "broadcast"
+    assert CrawlConfig().fetch_join == "auto"
     CrawlConfig(fetch_join="copartition")
 
 
